@@ -39,7 +39,7 @@ Scale notes (100 TB / 10^12 docs):
   (reference/oscar-create/CellTextCompleter.h:167-199).
 - encode groups are (term, range_id): bounded memory regardless of term
   skew; blocks within a group are ≤ BLOCK_SIZE docs.
-- All UDFs are Arrow-vectorized (mapInPandas/applyInPandas); the BM25
+- All UDFs are Arrow-vectorized (mapInPandas/mapInArrow); the BM25
   expression and every join/agg stay JVM-side.
 """
 
@@ -82,11 +82,6 @@ BLOCKS_SCHEMA = (
     "doc_count int, max_tf int, min_dl int, payload binary"
 )
 BLOCKS_POS_SCHEMA = BLOCKS_SCHEMA + ", pos_payload binary"
-FINAL_BLOCKS_SCHEMA = (
-    "bucket int, term string, block_id int, range_id long, "
-    "first_doc long, last_doc long, doc_count int, max_tf int, "
-    "min_dl int, max_score double, payload binary"
-)
 
 
 def _tokenize_batches(batches: Iterator[pd.DataFrame],
@@ -193,56 +188,63 @@ def _tokenize_batches(batches: Iterator[pd.DataFrame],
                 yield pd.DataFrame(frow)
 
 
-def _encode_run(terms: np.ndarray, rngs: np.ndarray, ids: np.ndarray,
-                tfs: np.ndarray, dls: np.ndarray,
-                codec: str = "varint", positions=None) -> pd.DataFrame:
-    """Encode a (term, range_id, doc_id)-sorted run of postings into
-    posting-block rows via the single-pass batched codec.
+def _encode_partition_arrow(batches, codec: str = "varint"):
+    """Partition encoder (mapInArrow) with cross-batch carry-over.
 
-    The whole run — group detection, delta reset, varint bytes, per-block
-    (max_tf, min_dl) metadata — is ~15 numpy passes total (codec.
-    encode_runs); per-block Python work is one bytes slice.  Earlier
-    shapes measured: per-group applyInPandas ~ms/group of pandas
-    overhead; per-block encode_block calls ~50µs/block of numpy dispatch
-    — both dominated the stage at bench scale.
+    Input partitions are hash-partitioned on (term, range_id) and sorted
+    by (term, range_id, doc_id) — the Spark shuffle IS the external sort
+    (the OOMGEOCELL mapping, SURVEY §2.5 O5).  Arrow batching may split a
+    group across batches, so the trailing (possibly incomplete) group of
+    each unit is held back and prepended to the next; a group is at most
+    RANGE_SIZE postings, so the carry buffer is bounded.
+
+    The whole unit — group detection, delta reset, varint bytes, per-block
+    (max_tf, min_dl) metadata — is one vectorized codec.encode_runs pass;
+    per-block Python work is one bytes slice.  The 10^7 shuffled term
+    strings NEVER materialize as Python objects: the string column is
+    dictionary-encoded in C++ (one hash pass), group detection runs on
+    the int codes, and the output term column is a C++ dictionary gather
+    (guide §4.2: hand whole batches to native code).  A positional
+    build's `pos` list column rides the same carry-over slices; its
+    flattened values (list offsets are native to Arrow) feed the
+    position side stream.
 
     Mirrors the per-cell sort + strict-monotone invariant of
     reference/oscar-create/CellTextCompleter.cpp:139-155 (makeConsistent);
     emits (max_tf, min_dl); max_score = bm25(max_tf, min_dl, df) is
     derived later on the tiny blocks table — a valid block-max upper
     bound (BM25 ↑ in tf, ↓ in dl) that keeps the per-posting pipeline
-    free of any df join or score column.
-    """
-    # factorize term strings → dense local codes (one C hash pass), so
-    # encode_runs' adjacent-inequality group detection compares int64,
-    # not per-element Python string equality
-    codes, uniq = pd.factorize(terms)
-    res = encode_runs(codes.astype(np.int64), rngs, ids, tfs, dls,
-                      BLOCK_SIZE, RANGE_SIZE, codec=codec,
-                      positions=positions)
-    out = pd.DataFrame(res)
-    if len(out):
-        out["term"] = np.asarray(uniq, dtype=object)[
-            out["term"].to_numpy(np.int64)]
-    return out
+    free of any df join or score column."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-
-def _encode_partition(batches: Iterator[pd.DataFrame],
-                      codec: str = "varint",
-                      with_positions: bool = False) -> Iterator[pd.DataFrame]:
-    """Partition encoder with cross-batch carry-over.
-
-    Input partitions are hash-partitioned on (term, range_id) and sorted
-    by (term, range_id, doc_id) — the Spark shuffle IS the external sort
-    (the OOMGEOCELL mapping, SURVEY §2.5 O5).  Arrow batching may split a
-    group across batches, so the trailing (possibly incomplete) group of
-    each batch is held back and prepended to the next; a group is at most
-    RANGE_SIZE postings, so the carry buffer is bounded.
-    """
     from oscar_spark.functions.tokenize import _pin_arrow_threads
     _pin_arrow_threads()
-    pending: pd.DataFrame | None = None
-    buf: list[pd.DataFrame] = []
+
+    def _encode(tbl: pa.Table) -> pa.RecordBatch:
+        term_dict = tbl.column("term").combine_chunks().dictionary_encode()
+        ids = tbl.column("doc_id").to_numpy().astype(np.int64)
+        positions = (pc.list_flatten(tbl.column("pos")).to_numpy()
+                     if "pos" in tbl.column_names else None)
+        res = encode_runs(term_dict.indices.to_numpy().astype(np.int64),
+                          ids // RANGE_SIZE, ids,
+                          tbl.column("tf").to_numpy().astype(np.int64),
+                          tbl.column("dl").to_numpy().astype(np.int64),
+                          BLOCK_SIZE, RANGE_SIZE, codec=codec,
+                          positions=positions)
+        cols = {"term": term_dict.dictionary.take(pa.array(
+            np.asarray(res["term"], np.int64).astype(np.int32)))}
+        for c in ("range_id", "first_doc", "last_doc"):
+            cols[c] = pa.array(np.asarray(res[c], np.int64))
+        for c in ("doc_count", "max_tf", "min_dl"):
+            cols[c] = pa.array(np.asarray(res[c], np.int64).astype(np.int32))
+        for c in ("payload", "pos_payload"):
+            if c in res:
+                cols[c] = pa.array(list(res[c]), pa.binary())
+        return pa.record_batch(cols)
+
+    pending: list[pa.Table] = []
+    buf: list[pa.RecordBatch] = []
     buf_rows = 0
     for batch in batches:
         # accumulate Arrow batches (default ~10k rows) into ~256k-row
@@ -250,130 +252,26 @@ def _encode_partition(batches: Iterator[pd.DataFrame],
         # amortizes over the unit size, while the buffer stays far below
         # executor memory
         buf.append(batch)
-        buf_rows += len(batch)
-        if buf_rows < 262144:
-            continue
-        pdf = pd.concat(buf, ignore_index=True)
-        buf, buf_rows = [], 0
-        if pending is not None and len(pending):
-            pdf = pd.concat([pending, pdf], ignore_index=True)
-        if len(pdf) == 0:
-            continue
-        terms = pdf["term"].to_numpy()
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        # range_id no longer rides the shuffle — one numpy divide
-        # recreates it (doc-id ranges are fixed-width)
-        rngs = ids // RANGE_SIZE
-        last_group = (terms == terms[-1]) & (rngs == rngs[-1])
-        # sorted input ⇒ the trailing group is a suffix
-        cut = len(pdf) - int(last_group[::-1].cumprod().sum())
-        head = pdf.iloc[:cut]
-        pending = pdf.iloc[cut:]
-        if len(head):
-            yield _encode_run(
-                head["term"].to_numpy(), rngs[:cut],
-                ids[:cut],
-                head["tf"].to_numpy(np.int64),
-                head["dl"].to_numpy(np.int64), codec,
-                head["pos"].to_numpy() if with_positions else None)
-    tail = ([pending] if pending is not None and len(pending) else []) + buf
-    if tail:
-        pdf = pd.concat(tail, ignore_index=True)
-        if len(pdf):
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            yield _encode_run(
-                pdf["term"].to_numpy(), ids // RANGE_SIZE,
-                ids,
-                pdf["tf"].to_numpy(np.int64),
-                pdf["dl"].to_numpy(np.int64), codec,
-                pdf["pos"].to_numpy() if with_positions else None)
-
-
-def _encode_partition_arrow(batches, codec: str = "varint"):
-    """Arrow-native partition encoder (non-positional builds): same
-    carry-over protocol and byte-identical blocks as _encode_partition,
-    but the 10^7 shuffled term strings NEVER materialize as Python
-    objects — mapInArrow hands pyarrow record batches whose string
-    column is dictionary-encoded in C++ (one hash pass), group
-    detection runs on the int32 codes, and the output term column is a
-    C++ dictionary gather (guide §4.2: hand whole batches to native
-    code; the Arrow→pandas object-array conversion was the dominant
-    per-task cost of the encode stage).  Positional builds keep the
-    pandas path: their per-posting position LISTS have no cheap
-    Arrow→numpy form, and positions are an opt-in index mode off the
-    bench path."""
-    import pyarrow as pa
-    import pyarrow.compute as pc  # noqa: F401  (dictionary ops)
-
-    from oscar_spark.functions.tokenize import _pin_arrow_threads
-    _pin_arrow_threads()
-
-    def _emit(tbl: pa.Table) -> pa.RecordBatch | None:
-        n = tbl.num_rows
-        if n == 0:
-            return None
-        term_dict = tbl.column("term").combine_chunks().dictionary_encode()
-        codes = term_dict.indices.to_numpy().astype(np.int64)
-        ids = tbl.column("doc_id").combine_chunks().to_numpy()
-        tfs = tbl.column("tf").combine_chunks().to_numpy()
-        dls = tbl.column("dl").combine_chunks().to_numpy()
-        res = encode_runs(codes, ids // RANGE_SIZE,
-                          ids.astype(np.int64), tfs.astype(np.int64),
-                          dls.astype(np.int64), BLOCK_SIZE, RANGE_SIZE,
-                          codec=codec)
-        out_codes = pa.array(np.asarray(res["term"], dtype=np.int64)
-                             .astype(np.int32), pa.int32())
-        return pa.record_batch({
-            "term": term_dict.dictionary.take(out_codes),
-            "range_id": pa.array(np.asarray(res["range_id"], np.int64),
-                                 pa.int64()),
-            "first_doc": pa.array(np.asarray(res["first_doc"], np.int64),
-                                  pa.int64()),
-            "last_doc": pa.array(np.asarray(res["last_doc"], np.int64),
-                                 pa.int64()),
-            "doc_count": pa.array(np.asarray(res["doc_count"], np.int64)
-                                  .astype(np.int32), pa.int32()),
-            "max_tf": pa.array(np.asarray(res["max_tf"], np.int64)
-                               .astype(np.int32), pa.int32()),
-            "min_dl": pa.array(np.asarray(res["min_dl"], np.int64)
-                               .astype(np.int32), pa.int32()),
-            "payload": pa.array(list(res["payload"]), pa.binary()),
-        })
-
-    pending: pa.Table | None = None
-    buf: list[pa.RecordBatch] = []
-    buf_rows = 0
-    for batch in batches:
-        buf.append(batch)
         buf_rows += batch.num_rows
         if buf_rows < 262144:
             continue
-        tbl = pa.Table.from_batches(buf)
+        tbl = pa.concat_tables(
+            pending + [pa.Table.from_batches(buf)]).combine_chunks()
         buf, buf_rows = [], 0
-        if pending is not None and pending.num_rows:
-            tbl = pa.concat_tables([pending, tbl])
-        tbl = tbl.combine_chunks()
-        n = tbl.num_rows
-        if n == 0:
-            continue
-        ids = tbl.column("doc_id").to_numpy()
-        rngs = ids // RANGE_SIZE
-        term_dict = tbl.column("term").combine_chunks().dictionary_encode()
-        codes = term_dict.indices.to_numpy()
+        rngs = tbl.column("doc_id").to_numpy() // RANGE_SIZE
+        codes = tbl.column("term").combine_chunks().dictionary_encode() \
+            .indices.to_numpy()
         last_group = (codes == codes[-1]) & (rngs == rngs[-1])
         # sorted input ⇒ the trailing group is a suffix
-        cut = n - int(last_group[::-1].cumprod().sum())
-        pending = tbl.slice(cut)
+        cut = tbl.num_rows - int(last_group[::-1].cumprod().sum())
+        pending = [tbl.slice(cut)]
         if cut:
-            out = _emit(tbl.slice(0, cut))
-            if out is not None:
-                yield out
-    tails = ([pending] if pending is not None and pending.num_rows else []) \
-        + ([pa.Table.from_batches(buf)] if buf else [])
+            yield _encode(tbl.slice(0, cut))
+    tails = pending + ([pa.Table.from_batches(buf)] if buf else [])
     if tails:
-        out = _emit(pa.concat_tables(tails).combine_chunks())
-        if out is not None:
-            yield out
+        tail = pa.concat_tables(tails).combine_chunks()
+        if tail.num_rows:
+            yield _encode(tail)
 
 
 _FINAL_COLS = ["bucket", "term", "block_id", "range_id", "first_doc",
@@ -450,7 +348,7 @@ def _final_blocks(spark: SparkSession, tokens: DataFrame,
     # the one big shuffle: hash-partition by (term, range_id), sort
     # within partitions — Spark's shuffle-with-spill is the external
     # sort (O5) — then encode whole partitions with a carry-over
-    # mapInPandas (per-group applyInPandas overhead dominated this
+    # mapInArrow (per-group applyInPandas overhead dominated this
     # stage: ~115-row groups x ~ms of pandas each)
     # 4 encode tasks per core: the (term, range_id) hash is mildly
     # skewed, and coarse tasks leave cores idle behind stragglers
@@ -461,16 +359,11 @@ def _final_blocks(spark: SparkSession, tokens: DataFrame,
     shuffled = (postings_raw
                 .repartition(n_enc, F.col("term"), range_expr)
                 .sortWithinPartitions("term", "doc_id"))
-    if positions:
-        blocks = shuffled.mapInPandas(
-            lambda it, _c=codec: _encode_partition(it, _c, True),
-            BLOCKS_POS_SCHEMA)
-    else:
-        # Arrow-native encode: term strings stay in C++ buffers end to
-        # end (see _encode_partition_arrow)
-        blocks = shuffled.mapInArrow(
-            lambda it, _c=codec: _encode_partition_arrow(it, _c),
-            BLOCKS_SCHEMA)
+    # Arrow-native encode: term strings stay in C++ buffers end to end
+    # (see _encode_partition_arrow)
+    blocks = shuffled.mapInArrow(
+        lambda it, _c=codec: _encode_partition_arrow(it, _c),
+        BLOCKS_POS_SCHEMA if positions else BLOCKS_SCHEMA)
     # phase 2 (the explicit two-phase merge) runs on the TINY blocks
     # stream (~rows/BLOCK_SIZE): per-term df, the block-max upper
     # bound, and global block numbering.  A term's blocks live wholly
@@ -501,6 +394,164 @@ def _final_blocks(spark: SparkSession, tokens: DataFrame,
             repr(float(n_corpus)), repr(float(avgdl)))))
         .select(*fcols)
     )
+
+
+def _put(store: IndexStore, df: DataFrame, table: str, seg: str | None,
+         partition_by: list[str] | None = None) -> None:
+    """Write df as the table's base (seg None: a full rewrite) or as one
+    new, not yet committed segment."""
+    if seg is None:
+        store.write(df, table, partition_by)
+    else:
+        store.write_segment(df, table, seg, partition_by)
+
+
+def _stage_fingerprints(fp: str, codec: str, positions: bool,
+                        fields: tuple[str, ...]) -> dict[str, str]:
+    """Manifest fingerprint of each build stage over input fingerprint
+    fp, in commit order.  A resume skips a stage only when its recorded
+    fingerprint matches, so each one carries exactly the modes its
+    output depends on:
+    - tokens: positions + fields, and `|m2` = tokens-table format 2
+      (per-doc NULL-term marker rows) — a store whose tokens were
+      committed WITHOUT markers must re-tokenize on resume, or the
+      marker-filter doc lengths would see only empty docs;
+    - postings: the codec too — resume over an index committed with a
+      DIFFERENT codec must rebuild, not silently keep the old payloads
+      under the new codec label;
+    - terms: fields only — df depends on the fielded-token set, not on
+      codec/positions; without the flag a fields-flip rebuild would
+      skip the terms stage and leave a stale dictionary disagreeing
+      with the postings."""
+    f = ",".join(fields)
+    return {"tokens": f"{fp}|pos={int(positions)}|f={f}|m2",
+            "doc_stats": fp,
+            "postings": f"{fp}|codec={codec}|pos={int(positions)}|f={f}",
+            "terms": f"{fp}|f={f}"}
+
+
+def _write_tokens(store: IndexStore, pages: DataFrame, positions: bool,
+                  fields: tuple[str, ...], seg: str | None = None) -> None:
+    """Tokenize (url, text[, fields…]) pages into the tokens table."""
+    _put(store, pages.select("url", "text", *fields).mapInPandas(
+        lambda it, _p=positions, _f=fields: _tokenize_batches(it, _p, _f),
+        TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA), "tokens", seg)
+
+
+def _doc_lens(tokens: DataFrame,
+              indexed: DataFrame | None = None) -> DataFrame:
+    """(url, doc_len, quality) per doc from the tokenizer's NULL-term
+    marker rows (exactly one per doc, tf=0, dl attached) — a column-
+    pruned filter scan instead of a full groupBy(url) pass + exchange
+    over the whole token table (r06, guide §2.3/§2.4).  quality :=
+    doc_len (pinned static score for the fixture corpus).
+
+    indexed: committed doc_stats.  url is the document key, so a
+    re-crawled url that is ALREADY indexed is dropped (left_anti — a
+    column-pruned scan of the committed urls), matching the full
+    build's one-doc-per-url semantics; its orphaned token rows never
+    meet a doc_id and fall out of the postings join."""
+    lens = (tokens.filter(F.col("term").isNull())
+            .select("url", F.col("dl").alias("doc_len")))
+    if indexed is not None:
+        lens = lens.join(indexed.select("url"), "url", "left_anti")
+    return lens.withColumn("quality", F.col("doc_len").cast("double"))
+
+
+def _write_doc_stats(store: IndexStore, doc_lens: DataFrame,
+                     seg: str | None = None,
+                     first_id: int | None = None) -> dict:
+    """Assign doc ids (rank by static quality; analog of applySort score
+    ordering, OsmKeyValueObjectStore.cpp:1339-1399) to the materialized
+    doc_lens and write doc_stats → {"n", "sum"} of doc_len.  The corpus
+    stats ride along on the docID manifest collect — no separate
+    aggregation job.  first_id offsets the ids past a committed id
+    space (an appended segment)."""
+    spark = doc_lens.sparkSession
+    doc_stats, stats = assign_doc_ids_ranged(
+        doc_lens,
+        num_partitions=max(spark.sparkContext.defaultParallelism, 8),
+        stats_col="doc_len")
+    if first_id is not None:
+        doc_stats = doc_stats.withColumn(
+            "doc_id", (F.col("doc_id") + F.lit(first_id)).cast("long"))
+    _put(store, doc_stats.select("doc_id", "url", "doc_len", "quality"),
+         "doc_stats", seg)
+    return stats
+
+
+def _write_postings(spark: SparkSession, store: IndexStore,
+                    blocks: DataFrame, dedup: bool,
+                    seg: str | None = None) -> dict | None:
+    """Write finalized posting blocks as `postings`.
+
+    dedup — A7: store-wide posting-payload dedup (ItemIndexFactory,
+    reference/oscar-create/oscarcreate.cpp:74,100-115 — one ItemIndex
+    stored per distinct item set).  Identical payloads are endemic in
+    the Zipf tail: every hapax term of one doc encodes the same (delta,
+    tf=1, dl) bytes.  Payloads are stored ONCE per (bucket, md5) in
+    `payloads`; postings keep the 32-char ref.  Opt-in: serve's payload
+    fetch gains a per-bucket hash join, which a latency-critical index
+    may not want.  JVM-side F.md5 — no Python in the path.  An appended
+    segment (A7 × S6) keeps only the payloads absent from the committed
+    payloads table (anti-join on (bucket, md5) — the re-dedup-on-
+    reimport analog of oscarcreate.cpp:100-115).
+
+    → the base build's dedup counts (None for a segment or no dedup)."""
+    if not dedup:
+        _put(store, blocks, "postings", seg, ["bucket"])
+        return None
+    import shutil
+    # materialize once: payloads + postings below would each re-run the
+    # whole encode otherwise
+    store.write_segment(blocks.withColumn("payload_hash", F.md5("payload")),
+                        "_postings_staged", seg or "base")
+    staged = store.read_segment(spark, "_postings_staged", seg or "base")
+    payloads = (staged.select("bucket", "payload_hash", "payload")
+                .dropDuplicates(["bucket", "payload_hash"]))
+    if seg is not None:
+        payloads = payloads.join(
+            store.read(spark, "payloads").select("bucket", "payload_hash"),
+            ["bucket", "payload_hash"], "left_anti")
+    _put(store, payloads, "payloads", seg, ["bucket"])
+    _put(store, staged.drop("payload"), "postings", seg, ["bucket"])
+    counts = None if seg is not None else {
+        "blocks": int(staged.count()),
+        "unique_payloads": int(store.read(spark, "payloads").count())}
+    shutil.rmtree(store.path("_postings_staged"), ignore_errors=True)
+    return counts
+
+
+def _terms_of(postings: DataFrame) -> DataFrame:
+    """(bucket, term, df, n_blocks) from posting blocks: df recomputed
+    from postings so the stored df provably equals the posting contents
+    (FIXTURES.md invariant 2)."""
+    return (postings.groupBy("bucket", "term")
+            .agg(F.sum("doc_count").cast("long").alias("df"),
+                 F.count("*").cast("long").alias("n_blocks")))
+
+
+def _write_terms(store: IndexStore, terms: DataFrame,
+                 seg: str | None = None) -> None:
+    """The term dictionary, term-sorted within each bucket so parquet
+    row-group min/max prunes dictionary range scans."""
+    _put(store, terms.repartition("bucket")
+         .sortWithinPartitions("bucket", "term"),
+         "terms", seg, ["bucket"])
+
+
+def _write_terms_segment(spark: SparkSession, store: IndexStore,
+                         terms: DataFrame, seg: str) -> None:
+    """terms as segment seg, then its wildcard mirrors from that
+    written segment."""
+    _write_terms(store, terms, seg)
+    _write_terms_rev(store, store.read_segment(spark, "terms", seg), seg)
+
+
+# the tables an append adds one segment to (plus payloads in a dedup
+# store) and compaction merges; the term tables are replaced whole
+_SEGMENTED = ["tokens", "doc_stats", "postings"]
+_TERM_TABLES = ["terms", "terms_rev", "terms_ngram"]
 
 
 def _write_terms_rev(store: IndexStore, terms: DataFrame,
@@ -552,10 +603,7 @@ def _write_terms_rev(store: IndexStore, terms: DataFrame,
 
     def _w(df: DataFrame, name: str) -> None:
         try:
-            if seg is None:
-                store.write(df, name)
-            else:
-                store.write_segment(df, name, seg)
+            _put(store, df, name, seg)
         except BaseException as e:  # surfaced after join
             errs.append(e)
 
@@ -615,6 +663,45 @@ class BuildResult:
     elapsed_sec: float
     resumed_stages: list[str]
     stage_secs: dict | None = None
+
+
+class _StageClock:
+    """Wall seconds per build stage: calling it with a stage name closes
+    that stage, so `secs` lists the stages in run order and sums to the
+    time since construction."""
+
+    def __init__(self) -> None:
+        self.t0 = self._last = time.time()
+        self.secs: dict[str, float] = {}
+
+    def __call__(self, name: str) -> None:
+        now = time.time()
+        self.secs[name] = round(now - self._last, 2)
+        self._last = now
+
+
+def _finish(store: IndexStore, clock: _StageClock, bucket_stats: list,
+            fp: str, n_rate: int, n_docs: int, avgdl: float,
+            resumed: list[str],
+            pages: DataFrame | None = None) -> BuildResult:
+    """Lineage rows, counts and the BuildResult of a build call.
+    docs_per_sec rates n_rate docs (an append: the new ones) over the
+    call's elapsed time.  pages: the full build's input, whose per-file
+    manifest becomes the append-detection baseline for the next build
+    over a grown input."""
+    elapsed = time.time() - clock.t0
+    dps = n_rate / elapsed if elapsed > 0 else 0.0
+    _write_lineage(store, bucket_stats, fp, dps)
+    sigs = input_files_sig(pages) if pages is not None else None
+    if sigs:
+        store.set_meta("input_files", sigs)
+    clock("lineage_and_counts")
+    return BuildResult(
+        n_docs=n_docs, avgdl=avgdl,
+        n_terms=sum(r["terms_out"] for r in bucket_stats),
+        n_blocks=int(sum(r["blocks_out"] for r in bucket_stats)),
+        docs_per_sec=dps, elapsed_sec=elapsed, resumed_stages=resumed,
+        stage_secs=clock.secs)
 
 
 def _tune_scan_partitions(spark: SparkSession,
@@ -678,7 +765,6 @@ def extract_pages(pages: DataFrame) -> DataFrame:
 def input_files_sig(pages: DataFrame) -> dict[str, str] | None:
     """File-backed input → {file URI: "size|mtime"} (driver-side listing,
     no data scan); None for in-memory input."""
-    import zlib  # noqa: F401  (kept for fingerprint parity)
     from urllib.parse import unquote, urlparse
     files = sorted(pages.inputFiles())
     if not files:
@@ -781,15 +867,15 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
     varint store.  Passing an explicit value still overrides — a real
     mode FLIP rebuilds, as the append gate requires."""
     from oscar_spark.config import POSTINGS_CODEC
+    store = IndexStore(index_dir)
     if resume:
-        _meta = IndexStore(index_dir)
-        codec = codec or _meta.get_meta("codec", None) or POSTINGS_CODEC
+        codec = codec or store.get_meta("codec", None) or POSTINGS_CODEC
         if dedup_payloads is None:
-            dedup_payloads = bool(_meta.get_meta("payload_dedup", False))
+            dedup_payloads = bool(store.get_meta("payload_dedup", False))
         if positions is None:
-            positions = bool(_meta.get_meta("positions", False))
+            positions = bool(store.get_meta("positions", False))
         if fields is None:
-            fields = tuple(_meta.get_meta("fields", []) or [])
+            fields = tuple(store.get_meta("fields", []) or [])
     codec = codec or POSTINGS_CODEC
     dedup_payloads = bool(dedup_payloads)
     positions = bool(positions)
@@ -813,15 +899,7 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
             raise ValueError(
                 f"field columns collide after key normalization: {coll}"
                 " — the composite key:value tokens would be ambiguous")
-    t0 = time.time()
-    stage_secs: dict[str, float] = {}
-    _last = [t0]
-
-    def _mark(name: str) -> None:
-        now = time.time()
-        stage_secs[name] = round(now - _last[0], 2)
-        _last[0] = now
-
+    clock = _StageClock()
     # input_hint shape is (url, warc_ts, html, text, lang); a table
     # carrying only the raw html gets the pinned extractor applied
     # (byte-identity with pre-extracted text is a test invariant).
@@ -832,9 +910,9 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
     if "text" not in pages.columns:
         pages = extract_pages(pages)
 
-    store = IndexStore(index_dir)
     fp = input_fingerprint(pages)
-    _mark("fingerprint")
+    fps = _stage_fingerprints(fp, codec, positions, fields)
+    clock("fingerprint")
     resumed: list[str] = []
 
     # ---- incremental append (store→store re-import analog,
@@ -847,10 +925,7 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         recorded = store.get_meta("input_files")
         cur = input_files_sig(raw_pages)
         if (recorded and cur and len(cur) > len(recorded)
-                and not store.committed(
-                    "postings",
-                    f"{fp}|codec={codec}|pos={int(positions)}"
-                    f"|f={','.join(fields)}")
+                and not store.committed("postings", fps["postings"])
                 and store.get_meta("codec", codec) == codec
                 # a positional/fielded flag flip means a rebuild
                 and store.get_meta("positions", False) == positions
@@ -876,37 +951,18 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
     # inverted N→4N scaling.  A parquet checkpoint makes the cost flat,
     # disk-backed, fully parallel, and doubles as a resume snapshot
     # (store→store re-import, reference/oscar-create/oscarcreate.cpp:86-116).
-    ffp = ",".join(fields)
-    # |m2 = tokens-table format 2 (per-doc NULL-term marker rows): a
-    # store whose tokens were committed WITHOUT markers must re-tokenize
-    # on resume, or the marker-filter doc_lens below would see only
-    # empty docs
-    tfp = f"{fp}|pos={int(positions)}|f={ffp}|m2"
-    if resume and store.committed("tokens", tfp):
+    if resume and store.committed("tokens", fps["tokens"]):
         resumed.append("tokens")
     else:
-        store.write(pages.select("url", "text", *fields).mapInPandas(
-            lambda it, _p=positions, _f=fields:
-                _tokenize_batches(it, _p, _f),
-            TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA), "tokens")
-        store.commit("tokens", tfp)
-    _mark("tokens")
+        _write_tokens(store, pages, positions, fields)
+        store.commit("tokens", fps["tokens"])
+    clock("tokens")
     tokens = store.read(spark, "tokens")
 
-    # ---- stage 1: doc_stats (docID = rank by static quality; analog of
-    # applySort score ordering, OsmKeyValueObjectStore.cpp:1339-1399) ----
-    if resume and store.committed("doc_stats", fp):
+    # ---- stage 1: doc_stats (docID = rank by static quality) ----
+    if resume and store.committed("doc_stats", fps["doc_stats"]):
         resumed.append("doc_stats")
     else:
-        # r06: per-doc lengths come from the tokenizer's NULL-term
-        # marker rows (exactly one per doc, tf=0, dl attached) — a
-        # column-pruned filter scan instead of a full groupBy(url) pass
-        # + exchange over the whole token table (guide §2.3/§2.4)
-        doc_lens = (tokens.filter(F.col("term").isNull())
-                    .select("url", F.col("dl").alias("doc_len")))
-        # quality := doc_len (pinned static score for the fixture corpus)
-        doc_lens = doc_lens.withColumn(
-            "quality", F.col("doc_len").cast("double"))
         # materialize the per-doc table ONCE: repartitionByRange's
         # boundary-sample job and the partition-pinning checkpoint inside
         # assign_doc_ids_ranged would otherwise EACH re-execute the full
@@ -917,23 +973,16 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         # extra job launch.  ~one short row per doc; distributed
         # MEMORY_AND_DISK — on a real cluster a reliable checkpoint dir
         # / Iceberg staging table plays this role.
-        doc_lens = doc_lens.localCheckpoint(eager=False)
-        # corpus stats (n_docs, Σdl) ride along on the docID manifest
-        # collect — no separate aggregation job — and persist in the
-        # manifest so later stages, resumes, and serve startup never
-        # pay one either
-        doc_stats, stats = assign_doc_ids_ranged(
-            doc_lens,
-            num_partitions=max(spark.sparkContext.defaultParallelism, 8),
-            stats_col="doc_len")
-        store.write(doc_stats.select("doc_id", "url", "doc_len", "quality"),
-                    "doc_stats")
+        doc_lens = _doc_lens(tokens).localCheckpoint(eager=False)
+        # corpus stats (n_docs, Σdl) persist in the manifest so later
+        # stages, resumes, and serve startup never pay a job for them
+        stats = _write_doc_stats(store, doc_lens)
         store.set_meta("n_docs", int(stats["n"]))
         store.set_meta("avgdl",
                        stats["sum"] / stats["n"] if stats["n"] else 0.0)
         doc_lens.unpersist()
-        store.commit("doc_stats", fp)
-    _mark("doc_stats")
+        store.commit("doc_stats", fps["doc_stats"])
+    clock("doc_stats")
     doc_stats = store.read(spark, "doc_stats")
     n_docs, avgdl = store.get_meta("n_docs"), store.get_meta("avgdl")
     if n_docs is None:  # store committed by an older build: derive once
@@ -942,85 +991,41 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
     n_docs, avgdl = int(n_docs), float(avgdl)
 
     # ---- stage 2: postings ----
-    # codec folded into the stage fingerprint: resume over an index
-    # committed with a DIFFERENT codec must rebuild, not silently keep
-    # the old payloads under the new codec label
-    pfp = f"{fp}|codec={codec}|pos={int(positions)}|f={ffp}"
-    if resume and store.committed("postings", pfp):
+    if resume and store.committed("postings", fps["postings"]):
         resumed.append("postings")
     else:
         final_blocks = _final_blocks(spark, tokens, doc_stats, n_docs,
                                      n_docs, avgdl, codec, positions,
                                      urls_closed=True)
-        if dedup_payloads:
-            # A7: store-wide posting-payload dedup (ItemIndexFactory,
-            # reference/oscar-create/oscarcreate.cpp:74,100-115 — one
-            # ItemIndex stored per distinct item set).  Identical
-            # payloads are endemic in the Zipf tail: every hapax term
-            # of one doc encodes the same (delta, tf=1, dl) bytes.
-            # Payloads are stored ONCE per (bucket, md5); postings keep
-            # the 32-char ref.  Opt-in: serve's payload fetch gains a
-            # per-bucket hash join, which a latency-critical index may
-            # not want.  JVM-side F.md5 — no Python in the path.
-            import shutil
-            fb = final_blocks.withColumn("payload_hash", F.md5("payload"))
-            # materialize once: payloads + postings below would each
-            # re-run the whole encode otherwise
-            store.write_segment(fb, "_postings_staged", "base")
-            staged = store.read_segment(spark, "_postings_staged", "base")
-            payloads = (staged.select("bucket", "payload_hash", "payload")
-                        .dropDuplicates(["bucket", "payload_hash"]))
-            store.write(payloads, "payloads", partition_by=["bucket"])
-            store.write(staged.drop("payload"), "postings",
-                        partition_by=["bucket"])
-            n_all = staged.count()
-            n_uniq = store.read(spark, "payloads").count()
-            store.set_meta("payload_dedup", True)
-            store.set_meta("payload_dedup_stats",
-                           {"blocks": int(n_all),
-                            "unique_payloads": int(n_uniq)})
-            shutil.rmtree(store.path("_postings_staged"),
-                          ignore_errors=True)
-        else:
-            store.write(final_blocks, "postings", partition_by=["bucket"])
-            store.set_meta("payload_dedup", False)
+        dedup_counts = _write_postings(spark, store, final_blocks,
+                                       dedup_payloads)
+        store.set_meta("payload_dedup", dedup_payloads)
+        if dedup_counts:
+            store.set_meta("payload_dedup_stats", dedup_counts)
         store.set_meta("codec", codec)
         store.set_meta("payload_format", PAYLOAD_FORMAT)
         store.set_meta("positions", positions)
         store.set_meta("fields", list(fields))
-        store.commit("postings", pfp)
-    _mark("postings")
+        store.commit("postings", fps["postings"])
+    clock("postings")
     postings = store.read(spark, "postings")
 
-    # ---- stage 3: terms (df recomputed from committed postings so the
-    # stored df provably equals the posting contents — FIXTURES.md inv 2) ----
-    # df contents depend on the fielded-token set (not codec/positions),
-    # so the terms fingerprint carries the fields flag — without it a
-    # fields-flip rebuild would skip the terms stage and leave a stale
-    # dictionary disagreeing with the postings
-    trfp = f"{fp}|f={ffp}"
-    if resume and store.committed("terms", trfp):
+    # ---- stage 3: terms (df recomputed from committed postings) ----
+    if resume and store.committed("terms", fps["terms"]):
         resumed.append("terms")
-        terms = store.read(spark, "terms")
-        bucket_stats = _collect_bucket_stats(terms)
+        bucket_stats = _collect_bucket_stats(store.read(spark, "terms"))
     else:
-        terms_src = (
-            postings.groupBy("bucket", "term")
-            .agg(F.sum("doc_count").cast("long").alias("df"),
-                 F.count("*").cast("long").alias("n_blocks"))
-        )
-        # r06: all FOUR jobs of this stage — the terms write (term-
-        # sorted within each bucket so parquet row-group min/max prunes
-        # dictionary range scans), both wildcard-mirror writes, and the
-        # bucket-stats collect — derive from the same deterministic
-        # aggregation over the COMMITTED postings parquet (terms_src),
-        # so they are independent and run CONCURRENTLY (guide §2.6).
-        # The mirrors/stats previously waited for the committed terms
-        # parquet, serializing the stage behind two extra job-latency
-        # barriers.  Contents are unchanged: the mirrors project only
-        # (term, df) and the agg is deterministic on committed input,
-        # so "df provably equals the posting contents" (FIXTURES.md
-        # inv 2) still holds for everything written here.
+        # r06: all FOUR jobs of this stage — the terms write, both
+        # wildcard-mirror writes, and the bucket-stats collect — derive
+        # from the same deterministic aggregation over the COMMITTED
+        # postings parquet (terms_src), so they are independent and run
+        # CONCURRENTLY (guide §2.6).  The mirrors/stats previously
+        # waited for the committed terms parquet, serializing the stage
+        # behind two extra job-latency barriers.  Contents are
+        # unchanged: the mirrors project only (term, df) and the agg is
+        # deterministic on committed input, so "df provably equals the
+        # posting contents" (FIXTURES.md inv 2) still holds for
+        # everything written here.
         # r06 session 3: terms_src is materialized ONCE (eager
         # localCheckpoint — one 16-task agg job) instead of re-running
         # the postings-parquet agg lineage inside every one of the 5+
@@ -1029,15 +1034,13 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         # slim rows, the standard distributed MEMORY_AND_DISK shape at
         # any scale, and it is unpersisted before the stage commits.
         import threading
-        terms_src = terms_src.localCheckpoint(eager=True)
+        terms_src = _terms_of(postings).localCheckpoint(eager=True)
         _stats: dict = {}
         _terr: list[BaseException] = []
 
         def _terms_job() -> None:
             try:
-                store.write(terms_src.repartition("bucket")
-                            .sortWithinPartitions("bucket", "term"),
-                            "terms", partition_by=["bucket"])
+                _write_terms(store, terms_src)
             except BaseException as e:
                 _terr.append(e)
 
@@ -1070,26 +1073,10 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         if "err" in _stats:
             raise _stats["err"]
         bucket_stats = _stats["rows"]
-        store.commit("terms", trfp)
-    _mark("terms")
-
-    n_terms = sum(r["terms_out"] for r in bucket_stats)
-    n_blocks = sum(r["blocks_out"] for r in bucket_stats)
-    elapsed = time.time() - t0
-    dps = n_docs / elapsed if elapsed > 0 else 0.0
-
-    _write_lineage(store, bucket_stats, fp, dps)
-    # per-file input manifest: the append-detection baseline for the
-    # next build over a grown input
-    sigs = input_files_sig(pages)
-    if sigs:
-        store.set_meta("input_files", sigs)
-    _mark("lineage_and_counts")
-
-    return BuildResult(n_docs=n_docs, avgdl=avgdl, n_terms=n_terms,
-                       n_blocks=int(n_blocks), docs_per_sec=dps,
-                       elapsed_sec=elapsed, resumed_stages=resumed,
-                       stage_secs=stage_secs)
+        store.commit("terms", fps["terms"])
+    clock("terms")
+    return _finish(store, clock, bucket_stats, fp, n_docs, n_docs, avgdl,
+                   resumed, pages)
 
 
 def ingest_segment(spark: SparkSession, new_pages: DataFrame,
@@ -1140,38 +1127,15 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
 
     # ---- tokenize only the new pages (positional/fielded stores stay
     # that way: the flags are inherited from the manifest) ----
-    store.write_segment(
-        new_pages.select("url", "text", *fields).mapInPandas(
-            lambda it, _p=positions, _f=fields:
-                _tokenize_batches(it, _p, _f),
-            TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA),
-        "tokens", seg)
+    _write_tokens(store, new_pages, positions, fields, seg)
     mark("tokens_append")
     tokens_new = store.read_segment(spark, "tokens", seg)
 
-    # ---- doc ids for the new docs, offset past the committed space.
-    # url is the document key: a re-crawled url that is ALREADY indexed
-    # is dropped (left_anti against committed doc_stats — a column-
-    # pruned scan of n_old single urls), matching the full build's
-    # one-doc-per-url groupBy semantics; its orphaned token rows never
-    # meet a doc_id and fall out of the postings join ----
-    # per-doc lengths from the tokenizer's NULL-term marker rows (one
-    # per doc) — same filter-not-groupBy shape as the full build (r06)
-    doc_lens = (tokens_new.filter(F.col("term").isNull())
-                .select("url", F.col("dl").alias("doc_len"))
-                .join(store.read(spark, "doc_stats").select("url"),
-                      "url", "left_anti")
-                .withColumn("quality", F.col("doc_len").cast("double"))
-                .localCheckpoint(eager=False))
-    assigned, stats = assign_doc_ids_ranged(
-        doc_lens,
-        num_partitions=max(spark.sparkContext.defaultParallelism, 8),
-        stats_col="doc_len")
-    doc_stats_new = (
-        assigned
-        .withColumn("doc_id", (F.col("doc_id") + F.lit(n_old)).cast("long"))
-        .select("doc_id", "url", "doc_len", "quality"))
-    store.write_segment(doc_stats_new, "doc_stats", seg)
+    # ---- doc ids for the new docs, offset past the committed space;
+    # already-indexed (re-crawled) urls are dropped (see _doc_lens) ----
+    doc_lens = _doc_lens(tokens_new, store.read(spark, "doc_stats")) \
+        .localCheckpoint(eager=False)
+    stats = _write_doc_stats(store, doc_lens, seg, first_id=n_old)
     n_new, dl_sum_new = int(stats["n"]), int(stats["sum"])
     n_total = n_old + n_new
     avgdl_total = ((avgdl_old * n_old + dl_sum_new) / n_total
@@ -1185,7 +1149,6 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
         n_new, n_total, avgdl_total, codec, positions)
     # continue each term's block numbering after its committed blocks
     terms_old = store.read(spark, "terms")
-    fcols = _FINAL_COLS + (["pos_payload"] if positions else [])
     final_new = (
         final_new
         .join(terms_old.select("term", F.col("n_blocks").alias("_ob")),
@@ -1193,70 +1156,35 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
         .withColumn("block_id", (F.col("block_id") +
                                  F.coalesce(F.col("_ob"), F.lit(0)))
                     .cast("int"))
-        .select(*fcols))
-    if store.get_meta("payload_dedup", False):
-        # A7 × S6: dedup-aware segment merge (the round-2 gap — dedup
-        # stores used to bail to a full rebuild).  Hash the NEW
-        # segment's payloads, keep only those absent from the committed
-        # payloads table (anti-join on (bucket, md5) — the re-dedup-on-
-        # reimport analog of reference/oscar-create/
-        # oscarcreate.cpp:100-115), and write postings without payload
-        # bytes, same layout as the base build's dedup form.
-        import shutil
-        fb = final_new.withColumn("payload_hash", F.md5("payload"))
-        store.write_segment(fb, "_postings_staged", seg)
-        staged = store.read_segment(spark, "_postings_staged", seg)
-        committed_p = store.read(spark, "payloads") \
-            .select("bucket", "payload_hash")
-        novel = (staged.select("bucket", "payload_hash", "payload")
-                 .dropDuplicates(["bucket", "payload_hash"])
-                 .join(committed_p, ["bucket", "payload_hash"],
-                       "left_anti"))
-        store.write_segment(novel, "payloads", seg,
-                            partition_by=["bucket"])
-        store.write_segment(staged.drop("payload"), "postings", seg,
-                            partition_by=["bucket"])
-        shutil.rmtree(store.path("_postings_staged"), ignore_errors=True)
-        seg_adds = {"tokens": [seg], "doc_stats": [seg],
-                    "postings": [seg], "payloads": [seg]}
-    else:
-        store.write_segment(final_new, "postings", seg,
-                            partition_by=["bucket"])
-        seg_adds = {"tokens": [seg], "doc_stats": [seg],
-                    "postings": [seg]}
+        .select(*final_new.columns))
+    # a dedup store's segment keeps the base build's dedup form
+    dedup = bool(store.get_meta("payload_dedup", False))
+    _write_postings(spark, store, final_new, dedup, seg)
     mark("postings_append")
 
     # ---- merged terms: old + new df/n_blocks, written as a NEW segment
     # that atomically REPLACES the old one at commit (no self-overwrite,
     # no window where df disagrees with the visible postings) ----
-    terms_new = (store.read_segment(spark, "postings", seg)
-                 .groupBy("bucket", "term")
-                 .agg(F.sum("doc_count").cast("long").alias("df"),
-                      F.count("*").cast("long").alias("n_blocks")))
-    merged = (terms_old.unionByName(terms_new)
+    merged = (terms_old
+              .unionByName(_terms_of(store.read_segment(spark, "postings",
+                                                        seg)))
               .groupBy("bucket", "term")
               .agg(F.sum("df").cast("long").alias("df"),
                    F.sum("n_blocks").cast("long").alias("n_blocks")))
-    store.write_segment(merged.repartition("bucket")
-                        .sortWithinPartitions("bucket", "term"),
-                        "terms", seg, partition_by=["bucket"])
-    _write_terms_rev(store, store.read_segment(spark, "terms", seg), seg)
+    _write_terms_segment(spark, store, merged, seg)
     mark("terms_append")
 
-    # ---- ONE atomic snapshot commit (fingerprint scheme matches
-    # build_index's, incl. the positional/fielded flags) ----
-    tfp = f"{fp}|pos={int(positions)}|f={','.join(fields)}|m2"
-    pfp = f"{fp}|codec={codec}|pos={int(positions)}|f={','.join(fields)}"
-    trfp = f"{fp}|f={','.join(fields)}"
+    # ---- ONE atomic snapshot commit (same stage fingerprints as
+    # build_index, incl. the positional/fielded flags) ----
     store.commit_append(
-        add=seg_adds,
-        replace={"terms": [seg], "terms_rev": [seg],
-                 "terms_ngram": [seg]},
+        add={t: [seg] for t in
+             _SEGMENTED + (["payloads"] if dedup else [])},
+        replace={t: [seg] for t in _TERM_TABLES},
         meta={"n_docs": n_total, "avgdl": avgdl_total, "codec": codec,
               "payload_format": PAYLOAD_FORMAT, "ngram2": True,
               **(extra_meta or {})},
-        stage_fingerprints={"tokens": tfp, "doc_stats": fp,
-                            "postings": pfp, "terms": trfp},
+        stage_fingerprints=_stage_fingerprints(fp, codec, positions,
+                                               fields),
     )
     return {"n_new": n_new, "n_total": n_total, "avgdl": avgdl_total}
 
@@ -1292,15 +1220,7 @@ def _append_index(spark: SparkSession, pages: DataFrame, store: IndexStore,
     """File-growth append: filter the input to its NEW files and run the
     segment ingest over just those rows."""
     import zlib
-    t0 = time.time()
-    stage_secs: dict[str, float] = {}
-    _last = [t0]
-
-    def _mark(name: str) -> None:
-        now = time.time()
-        stage_secs[name] = round(now - _last[0], 2)
-        _last[0] = now
-
+    clock = _StageClock()
     seg = "a%08x" % zlib.crc32(";".join(new_files).encode())
 
     # input_file_name() and DataFrame.inputFiles() render file URIs
@@ -1345,25 +1265,11 @@ def _append_index(spark: SparkSession, pages: DataFrame, store: IndexStore,
         new_pages = extract_pages(new_pages)
     stats = ingest_segment(spark, new_pages, store, seg, codec, fp,
                            extra_meta={"input_files": cur_sigs},
-                           mark=_mark)
-
-    terms = store.read(spark, "terms")
-    bucket_stats = terms.groupBy("bucket").agg(
-        F.sum("df").alias("rows_in"),
-        F.count("*").alias("terms_out"),
-        F.sum("n_blocks").alias("blocks_out")).collect()
-    n_terms = sum(r["terms_out"] for r in bucket_stats)
-    n_blocks = sum(r["blocks_out"] for r in bucket_stats)
-    elapsed = time.time() - t0
-    dps = stats["n_new"] / elapsed if elapsed > 0 else 0.0  # new-docs rate
-    _write_lineage(store, bucket_stats, fp, dps)
-    _mark("lineage_and_counts")
-
-    return BuildResult(n_docs=stats["n_total"], avgdl=stats["avgdl"],
-                       n_terms=n_terms, n_blocks=int(n_blocks),
-                       docs_per_sec=dps, elapsed_sec=elapsed,
-                       resumed_stages=[f"append:{seg}"],
-                       stage_secs=stage_secs)
+                           mark=clock)
+    return _finish(store, clock,
+                   _collect_bucket_stats(store.read(spark, "terms")), fp,
+                   stats["n_new"], stats["n_total"], stats["avgdl"],
+                   [f"append:{seg}"])
 
 
 def maybe_compact(spark: SparkSession, index_dir: str,
@@ -1413,10 +1319,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
 
     store = IndexStore(index_dir)
     dedup = bool(store.get_meta("payload_dedup", False))
-    tables = ["tokens", "doc_stats", "postings"] + \
-        (["payloads"] if dedup else [])
-    mirrors = ["terms", "terms_rev", "terms_ngram"]
-    pre = {t: store.segments(t) for t in tables + mirrors}
+    tables = _SEGMENTED + (["payloads"] if dedup else [])
+    pre = {t: store.segments(t) for t in tables + _TERM_TABLES}
     if all(len(pre[t]) <= 1 for t in tables):
         return {"compacted": False,
                 "segments_before": max(len(v) for v in pre.values())}
@@ -1438,22 +1342,16 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             .dropDuplicates(["bucket", "payload_hash"]),
             "payloads", seg, partition_by=["bucket"])
 
-    # terms re-derived from the compacted postings so the stored df
-    # provably equals the posting contents (FIXTURES.md invariant 2)
-    terms = (store.read_segment(spark, "postings", seg)
-             .groupBy("bucket", "term")
-             .agg(F.sum("doc_count").cast("long").alias("df"),
-                  F.count("*").cast("long").alias("n_blocks")))
-    store.write_segment(terms.repartition("bucket")
-                        .sortWithinPartitions("bucket", "term"),
-                        "terms", seg, partition_by=["bucket"])
-    _write_terms_rev(store, store.read_segment(spark, "terms", seg), seg)
+    # terms re-derived from the compacted postings
+    _write_terms_segment(
+        spark, store, _terms_of(store.read_segment(spark, "postings", seg)),
+        seg)
 
     # resume snapshots collapse to one segment unchanged
     store.write_segment(store.read(spark, "tokens"), "tokens", seg)
     store.write_segment(store.read(spark, "doc_stats"), "doc_stats", seg)
 
-    every = tables + mirrors
+    every = tables + _TERM_TABLES
     store.commit_append(replace={t: [seg] for t in every})
     for t in every:
         for s in set(pre.get(t, [])):

@@ -54,6 +54,17 @@ def _zipf_probs(size: int) -> np.ndarray:
 _EPOCH = dt.datetime(2025, 1, 1, 0, 0, 0)
 
 
+def list_offsets(lens: np.ndarray) -> np.ndarray:
+    """int32 Arrow ListArray offsets [0, cumsum(lens)…]; raises instead
+    of silently wrapping when the total exceeds the int32 range."""
+    offs = np.concatenate(([0], np.cumsum(lens, dtype=np.int64)))
+    if offs[-1] > np.iinfo(np.int32).max:
+        raise OverflowError(
+            f"{int(offs[-1])} list values exceed the int32 offset range "
+            "of an Arrow ListArray; generate fewer rows per slice")
+    return offs.astype(np.int32)
+
+
 def generate_pages(n_rows: int, seed: int = FIXTURE_SEED,
                    n_sites: int = 50, start_index: int = 0,
                    row_range: tuple[int, int] | None = None) -> pd.DataFrame:
@@ -123,9 +134,8 @@ def generate_pages(n_rows: int, seed: int = FIXTURE_SEED,
     # titles: words[row_start .. row_start+tl)
     t_idx, _, _ = _ranges(row_start, tl)
     titles = pc.binary_join(
-        pa.ListArray.from_arrays(
-            np.concatenate(([0], np.cumsum(tl))).astype(np.int32),
-            words_pa.take(pa.array(t_idx))), " ")
+        pa.ListArray.from_arrays(list_offsets(tl),
+                                 words_pa.take(pa.array(t_idx))), " ")
     # paragraphs: flat (row, para) lens with their word-range starts
     p_starts = (row_start[:, None] + tl[:, None]
                 + np.concatenate([np.zeros((n_out, 1), np.int64),
@@ -135,12 +145,10 @@ def generate_pages(n_rows: int, seed: int = FIXTURE_SEED,
     pflat_starts = p_starts[keep]
     pw_idx, _, _ = _ranges(pflat_starts, pflat_lens)
     para_txt = pc.binary_join(
-        pa.ListArray.from_arrays(
-            np.concatenate(([0], np.cumsum(pflat_lens))).astype(np.int32),
-            words_pa.take(pa.array(pw_idx))), " ")
+        pa.ListArray.from_arrays(list_offsets(pflat_lens),
+                                 words_pa.take(pa.array(pw_idx))), " ")
     wrapped = pc.binary_join_element_wise("<p>", para_txt, "</p>", "")
-    para_list_off = np.concatenate(
-        ([0], np.cumsum(np_sl))).astype(np.int32)
+    para_list_off = list_offsets(np_sl)
     body = pc.binary_join(
         pa.ListArray.from_arrays(para_list_off, wrapped), "")
     body_txt = pc.binary_join(

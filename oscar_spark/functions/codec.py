@@ -138,7 +138,9 @@ def encode_runs(terms: np.ndarray, rngs: np.ndarray, ids: np.ndarray,
     Block metadata (max_tf, min_dl) comes from ufunc.reduceat.
 
     Returns a dict of column arrays (term, range_id, first_doc,
-    last_doc, doc_count, max_tf, min_dl, payload).
+    last_doc, doc_count, max_tf, min_dl, payload); positions (the flat
+    occurrence positions of every posting, tf values each) adds
+    pos_payload.
     """
     n = len(ids)
     if n == 0:
@@ -233,12 +235,13 @@ def encode_runs(terms: np.ndarray, rngs: np.ndarray, ids: np.ndarray,
     return out
 
 
-def encode_position_runs(positions, tfs: np.ndarray,
+def encode_position_runs(positions: np.ndarray, tfs: np.ndarray,
                          bstarts: np.ndarray,
                          bends: np.ndarray) -> list[bytes]:
-    """Per-posting position lists → per-block varint payloads for the
-    positional SIDE stream (pos_payload column; the main payload format
-    is untouched, so positional and plain indexes share one decoder).
+    """Flat occurrence positions (posting i's tfs[i] values, in posting
+    order) → per-block varint payloads for the positional SIDE stream
+    (pos_payload column; the main payload format is untouched, so
+    positional and plain indexes share one decoder).
 
     Layout per block: positions of its postings in posting order, each
     posting's list gap-encoded (first position absolute, then deltas);
@@ -247,11 +250,7 @@ def encode_position_runs(positions, tfs: np.ndarray,
     sliced at block boundaries — the same single-pass shape as
     encode_runs."""
     tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    if len(positions):
-        flat = np.concatenate(
-            [np.asarray(p, dtype=np.int64) for p in positions])
-    else:
-        flat = np.empty(0, dtype=np.int64)
+    flat = np.asarray(positions, dtype=np.int64)
     if flat.shape[0] != int(tfs.sum()):
         raise ValueError("positions/tf length mismatch")
     pstarts = np.zeros(len(tfs) + 1, dtype=np.int64)

@@ -165,6 +165,12 @@ def _tree_shape(node) -> str:
     return "general"
 
 
+def _blocks_nbytes(blocks: list) -> int:
+    """Payload bytes of one term's cached (range_id, doc_count,
+    payload) blocks."""
+    return sum(len(p) for _, _, p in blocks)
+
+
 class SearchEngine:
     # preload the term dictionary driver-side below this many terms: it
     # removes one Spark job per query (and the prefix-scan job).  The
@@ -240,6 +246,8 @@ class SearchEngine:
         from collections import OrderedDict
         self._block_cache: OrderedDict[str, list] = OrderedDict()
         self._block_cache_bytes = 0
+        self.PRUNE_MIN_POSTINGS = int(_os.environ.get(
+            "OSCAR_PRUNE_MIN_POSTINGS", self.PRUNE_MIN_POSTINGS))
         self._timer: _StageTimer | None = None
         self.last_stage_times: dict[str, float] | None = None
         # term-dictionary preload, memoized PER STORE SNAPSHOT at module
@@ -515,42 +523,45 @@ class SearchEngine:
         # dedupe (order-preserving): the old isin() fetch was set-
         # semantic, so a repeated term must not contribute twice
         terms = list(dict.fromkeys(terms))
-        missing = [t for t in terms if t not in self._block_cache]
+        cache = self._block_cache
+        # snapshot the request's resident blocks BEFORE inserting the
+        # missing terms, and never evict a term this request uses: an
+        # evicted requested term would be served with no postings
+        got = {t: cache[t] for t in terms if t in cache}
+        for t in got:
+            cache.move_to_end(t)  # LRU touch
+        missing = [t for t in terms if t not in got]
         if missing:
             rows = (self._blocks(missing, meta_only=False)
                     .select("term", "range_id", "doc_count", "payload")
                     .collect())
-            by_term: dict[str, list] = {t: [] for t in missing}
+            for t in missing:
+                got[t] = []
             for r in rows:
-                by_term[r["term"]].append(
+                got[r["term"]].append(
                     (int(r["range_id"]), int(r["doc_count"]),
                      bytes(r["payload"])))
             for t in missing:
-                blks = by_term[t]
-                nb = sum(len(p) for _, _, p in blks)
-                # a term larger than the whole cap is served uncached
-                # rather than evicting everything else
-                if nb > self.BLOCK_CACHE_MAX_BYTES:
+                nb = _blocks_nbytes(got[t])
+                # evict least recently used terms the request does not
+                # use; a term that cannot fit beside them is served
+                # uncached rather than evicting them
+                victims = [k for k in cache if k not in got]
+                freeable = sum(_blocks_nbytes(cache[k]) for k in victims)
+                if (self._block_cache_bytes - freeable + nb
+                        > self.BLOCK_CACHE_MAX_BYTES):
                     continue
-                while (self._block_cache_bytes + nb
-                       > self.BLOCK_CACHE_MAX_BYTES and self._block_cache):
-                    _, old = self._block_cache.popitem(last=False)
-                    self._block_cache_bytes -= sum(
-                        len(p) for _, _, p in old)
-                self._block_cache[t] = blks
+                for k in victims:
+                    if (self._block_cache_bytes + nb
+                            <= self.BLOCK_CACHE_MAX_BYTES):
+                        break
+                    self._block_cache_bytes -= _blocks_nbytes(cache.pop(k))
+                cache[t] = got[t]
                 self._block_cache_bytes += nb
-            got = by_term
-        else:
-            got = {}
         cols: dict[str, list] = {"term": [], "range_id": [],
                                  "doc_count": [], "payload": []}
         for t in terms:
-            if t in self._block_cache:
-                self._block_cache.move_to_end(t)  # LRU touch
-                blks = self._block_cache[t]
-            else:
-                blks = got.get(t, [])
-            for rid, dc, p in blks:
+            for rid, dc, p in got[t]:
                 cols["term"].append(t)
                 cols["range_id"].append(rid)
                 cols["doc_count"].append(dc)
@@ -889,12 +900,12 @@ class SearchEngine:
     # below the true break-even.  2M postings decode to ~40 MB of
     # driver arrays (bounded, ~4-8 MB fetched payload) — well inside a
     # serving process's budget; at web scale head terms exceed this and
-    # take the distributed pruned path as before.  Env-overridable for
-    # deployments with different driver budgets (not a local[32]
-    # constant: the crossover is job-latency vs decode throughput,
-    # both cluster properties).
-    PRUNE_MIN_POSTINGS = int(__import__("os").environ.get(
-        "OSCAR_PRUNE_MIN_POSTINGS", 2_000_000))
+    # take the distributed pruned path as before.  This is the class
+    # default; each engine reads OSCAR_PRUNE_MIN_POSTINGS when it is
+    # constructed, for deployments with different driver budgets (not a
+    # local[32] constant: the crossover is job-latency vs decode
+    # throughput, both cluster properties).
+    PRUNE_MIN_POSTINGS = 2_000_000
 
     def _search_pruned(self, terms, dfmap, shape, k) -> DataFrame:
         present = [t for t in terms if dfmap.get(t, 0) > 0]

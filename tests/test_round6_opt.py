@@ -222,14 +222,11 @@ def test_prewarm_thread_started_by_get_spark(spark):
     assert getattr(spark.sparkContext, "_oscar_prewarmed", False)
 
 
-def test_arrow_encoder_matches_pandas_encoder():
-    """_encode_partition_arrow (mapInArrow path) must emit exactly the
-    blocks of _encode_partition (mapInPandas path) — same rows, same
-    payload bytes — including across the 262144-row carry boundary and
-    for every codec."""
-    import pyarrow as pa
-
-    from oscar_spark.build import indexer
+def _encoder_input(positional: bool = False) -> pd.DataFrame:
+    """Shuffled encoder input: (term, doc_id)-sorted postings over 400
+    terms whose doc ids span several ranges; positional adds each
+    posting's strictly increasing position list (tf values each)."""
+    from oscar_spark.config import RANGE_SIZE
 
     rng = np.random.RandomState(7)
     n_terms, n = 400, 600_000
@@ -240,8 +237,7 @@ def test_arrow_encoder_matches_pandas_encoder():
     bounds = np.flatnonzero(np.concatenate(
         ([True], term_ids[1:] != term_ids[:-1])))
     for lo, hi in zip(bounds, np.append(bounds[1:], n)):
-        ids[lo:hi] = np.sort(rng.randint(0, 3 * indexer.RANGE_SIZE,
-                                         size=hi - lo))
+        ids[lo:hi] = np.sort(rng.randint(0, 3 * RANGE_SIZE, size=hi - lo))
         # doc ids must be unique per (term, range) group for the codec
         ids[lo:hi] = np.cumsum(
             np.maximum(np.diff(np.concatenate(([0], ids[lo:hi]))), 1))
@@ -249,18 +245,71 @@ def test_arrow_encoder_matches_pandas_encoder():
     dls = rng.randint(10, 300, size=n).astype("int32")
     pdf = pd.DataFrame({"term": terms, "doc_id": ids, "tf": tfs,
                         "dl": dls})
-    cuts = [0, 50_000, 263_000, 300_001, 555_555, n]
-    pdf_batches = [pdf.iloc[a:b].reset_index(drop=True)
-                   for a, b in zip(cuts, cuts[1:])]
-    pa_batches = [pa.RecordBatch.from_pandas(b, preserve_index=False)
-                  for b in pdf_batches]
-    for codec in ("varint", "pfor", "ef", "wah"):
-        a = pd.concat(list(indexer._encode_partition(
-            iter(pdf_batches), codec, False)), ignore_index=True)
-        b = pa.Table.from_batches(list(indexer._encode_partition_arrow(
-            iter(pa_batches), codec))).to_pandas()
-        pd.testing.assert_frame_equal(
-            a.reset_index(drop=True), b.reset_index(drop=True))
+    if positional:
+        prng = np.random.RandomState(11)
+        starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
+        gaps = prng.randint(1, 5, size=int(tfs.sum())).astype(np.int64)
+        gaps[starts] = prng.randint(0, 50, size=n)
+        c = np.cumsum(gaps)
+        flat = (c - np.repeat(c[starts] - gaps[starts], tfs)).astype("int32")
+        pdf["pos"] = np.split(flat, starts[1:])
+    return pdf
+
+
+def _block_digests(blocks: pd.DataFrame) -> dict[str, str]:
+    """sha256 per encoder output column, in row order."""
+    import hashlib
+    out = {}
+    for c in blocks.columns:
+        h = hashlib.sha256()
+        if c in ("payload", "pos_payload"):
+            for b in blocks[c]:
+                h.update(len(b).to_bytes(4, "little") + bytes(b))
+        elif c == "term":
+            h.update("\n".join(blocks[c]).encode())
+        else:
+            h.update(blocks[c].to_numpy(np.int64).tobytes())
+        out[c] = h.hexdigest()
+    return out
+
+
+def test_arrow_encoder_matches_pandas_encoder():
+    """_encode_partition_arrow must emit exactly the blocks the former
+    pandas encoder did — same rows, same payload and pos_payload bytes —
+    for every codec and for a positional build, with batches cut across
+    the 262144-row carry boundary.  The pandas encoder's output over
+    _encoder_input is frozen as per-column digests in
+    encoder_golden.json."""
+    import json
+    import os
+
+    import pyarrow as pa
+
+    from oscar_spark.build import indexer
+
+    with open(os.path.join(os.path.dirname(__file__),
+                           "encoder_golden.json")) as f:
+        golden = json.load(f)
+    cuts = [0, 50_000, 263_000, 300_001, 555_555, 600_000]
+    runs = [(c, False) for c in ("varint", "pfor", "ef", "wah")] + \
+        [("varint", True)]
+    for codec, positional in runs:
+        pdf = _encoder_input(positional)
+        schema = pa.schema([("term", pa.string()), ("doc_id", pa.int64()),
+                            ("tf", pa.int32()), ("dl", pa.int32())]
+                           + ([("pos", pa.list_(pa.int32()))]
+                              if positional else []))
+        batches = [pa.RecordBatch.from_pandas(
+            pdf.iloc[a:b], schema=schema, preserve_index=False)
+            for a, b in zip(cuts, cuts[1:])]
+        blocks = pa.Table.from_batches(list(
+            indexer._encode_partition_arrow(iter(batches), codec)))
+        assert blocks.num_rows == golden["rows"], (codec, positional)
+        want = dict(golden["meta"], payload=golden["payload"][codec])
+        if positional:
+            want["pos_payload"] = golden["pos_payload"]
+        assert _block_digests(blocks.to_pandas()) == want, \
+            (codec, positional)
 
 
 def test_simhash_bitsum_count_identity(spark):
@@ -384,3 +433,97 @@ def test_block_cache_warm_repeat_zero_jobs(spark, built_index):
     eng.drop_memory()
     assert eng._block_cache_bytes == 0 and not eng._block_cache
     assert eng.search(q, k=10) == first  # refetch path still identical
+
+
+def test_block_cache_eviction_keeps_requested_terms(spark, built_index,
+                                                    oracle):
+    """Under a 100-byte cache cap with terms a and b resident, fetching
+    [a, c] must still return a's blocks: inserting c may evict only
+    terms the request does not use.  search and search_many under that
+    cap answer an AND and an OR query exactly as the brute path does."""
+    from pyspark.sql import functions as F
+
+    from oscar_spark.serve import parser
+    from oscar_spark.serve.executor import SearchEngine
+
+    d, _ = built_index
+    eng = SearchEngine(spark, d)
+    eng.BLOCK_CACHE_MAX_BYTES = 100
+    nbytes = {r["term"]: int(r["nb"]) for r in eng.postings
+              .groupBy("term").agg(F.sum(F.length("payload")).alias("nb"))
+              .collect()}
+    # 34-45 payload bytes each: any two terms fit under the cap, three
+    # do not; a and c co-occur so the AND query has hits
+    cands = sorted(t for t, nb in nbytes.items()
+                   if 34 <= nb <= 45 and ":" not in t)
+    a, c = next((x, y) for i, x in enumerate(cands) for y in cands[i + 1:]
+                if oracle.eval_node(parser.parse(f"{x} {y}")))
+    b = next(t for t in cands if t not in (a, c))
+
+    def make_ab_resident() -> None:
+        eng._block_cache.clear()
+        eng._block_cache_bytes = 0
+        eng._fetch_blocks_local([a])
+        eng._fetch_blocks_local([b])
+        assert list(eng._block_cache) == [a, b]
+
+    n_blocks_a = len(eng._fetch_blocks_local([a]))
+    make_ab_resident()
+    got = eng._fetch_blocks_local([a, c])
+    assert (got["term"] == a).sum() == n_blocks_a > 0
+    assert (got["term"] == c).sum() > 0
+    assert a in eng._block_cache
+    assert eng._block_cache_bytes <= eng.BLOCK_CACHE_MAX_BYTES
+
+    def same(res, want):
+        assert [i for i, _ in res] == [i for i, _ in want]
+        for (_, x), (_, y) in zip(res, want):
+            assert abs(x - y) <= 1e-9 * max(abs(y), 1.0)
+
+    queries = [f"{a} {c}", f"{a} + {c}"]
+    brute = [eng.search(q, k=10, mode="brute") for q in queries]
+    assert all(brute)
+    for q, want in zip(queries, brute):
+        make_ab_resident()
+        same(eng.search(q, k=10), want)
+    make_ab_resident()
+    for res, want in zip(eng.search_many(queries, k=10), brute):
+        same(res, want)
+
+
+def test_prune_min_postings_read_per_engine(spark, built_index,
+                                            monkeypatch):
+    """OSCAR_PRUNE_MIN_POSTINGS set after import takes effect on the next
+    engine: at 0 an auto query takes the pruned path, which leaves the
+    driver-local block cache empty; the class default stays 2M."""
+    from oscar_spark.serve.executor import SearchEngine
+
+    d, _ = built_index
+    monkeypatch.setenv("OSCAR_PRUNE_MIN_POSTINGS", "0")
+    eng = SearchEngine(spark, d)
+    assert eng.PRUNE_MIN_POSTINGS == 0
+    assert SearchEngine.PRUNE_MIN_POSTINGS == 2_000_000
+    want = eng.search("city + state", k=10, mode="local")
+    eng.drop_memory()
+    assert eng.search("city + state", k=10) == want
+    assert eng._block_cache_bytes == 0
+    monkeypatch.delenv("OSCAR_PRUNE_MIN_POSTINGS")
+    eng = SearchEngine(spark, d)
+    assert eng.PRUNE_MIN_POSTINGS == 2_000_000
+    eng.search("city + state", k=10)
+    assert eng._block_cache_bytes > 0
+
+
+def test_list_offsets_refuse_int32_wrap():
+    """The fixture generator's ListArray offsets raise instead of
+    wrapping past 2^31-1 values; in-range totals pass unchanged."""
+    import pytest
+
+    from oscar_spark.fixtures.pages import list_offsets
+
+    assert list_offsets(np.array([2, 0, 3])).tolist() == [0, 2, 2, 5]
+    assert list_offsets(np.array([2**31 - 1]))[-1] == 2**31 - 1
+    with pytest.raises(OverflowError, match="int32"):
+        list_offsets(np.array([2**31]))
+    with pytest.raises(OverflowError, match="int32"):
+        list_offsets(np.array([2**30, 2**30]))
