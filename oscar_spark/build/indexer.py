@@ -48,7 +48,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -62,6 +62,7 @@ from oscar_spark.functions.bm25 import bm25_sql
 from oscar_spark.functions.codec import PAYLOAD_FORMAT, encode_runs
 from oscar_spark.functions.extract import extract_series
 from oscar_spark.sources.tables import IndexStore
+from oscar_spark.timing import StageClock
 
 TOKENS_SCHEMA = "url string, term string, tf int, dl int"
 # positional build: per-(doc, term) occurrence positions in the
@@ -458,6 +459,29 @@ def _doc_lens(tokens: DataFrame,
     return lens.withColumn("quality", F.col("doc_len").cast("double"))
 
 
+def _persist(df: DataFrame, eager: bool = False) \
+        -> tuple[DataFrame, Callable[[], None]]:
+    """(df over its rows persisted MEMORY_AND_DISK, release).
+
+    The build's stand-in for localCheckpoint, which cuts the lineage: a
+    checkpoint block lost with its executor fails the build, while a
+    persisted block is recomputed from its lineage.  Every caller's
+    input is a deterministic aggregate of committed parquet, so the
+    recomputed block holds the same rows.  The persist sits on the rows'
+    RDD, as inside Dataset.localCheckpoint, not on the DataFrame: under
+    AQE a DataFrame cache is filled by a Spark job of its own before its
+    first reader, one more job per stage.  Lazy, the first job that
+    reads the rows persists them; eager fills them now in one job."""
+    spark = df.sparkSession
+    rdd = df._jdf.rdd().persist(
+        spark._jvm.org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK())
+    if eager:
+        rdd.count()
+    out = DataFrame(spark._jsparkSession.createDataFrame(
+        rdd, df._jdf.schema()), spark)
+    return out, lambda: rdd.unpersist(False)
+
+
 def _write_doc_stats(store: IndexStore, doc_lens: DataFrame,
                      seg: str | None = None,
                      first_id: int | None = None) -> dict:
@@ -665,22 +689,7 @@ class BuildResult:
     stage_secs: dict | None = None
 
 
-class _StageClock:
-    """Wall seconds per build stage: calling it with a stage name closes
-    that stage, so `secs` lists the stages in run order and sums to the
-    time since construction."""
-
-    def __init__(self) -> None:
-        self.t0 = self._last = time.time()
-        self.secs: dict[str, float] = {}
-
-    def __call__(self, name: str) -> None:
-        now = time.time()
-        self.secs[name] = round(now - self._last, 2)
-        self._last = now
-
-
-def _finish(store: IndexStore, clock: _StageClock, bucket_stats: list,
+def _finish(store: IndexStore, clock: StageClock, bucket_stats: list,
             fp: str, n_rate: int, n_docs: int, avgdl: float,
             resumed: list[str],
             pages: DataFrame | None = None) -> BuildResult:
@@ -701,7 +710,7 @@ def _finish(store: IndexStore, clock: _StageClock, bucket_stats: list,
         n_terms=sum(r["terms_out"] for r in bucket_stats),
         n_blocks=int(sum(r["blocks_out"] for r in bucket_stats)),
         docs_per_sec=dps, elapsed_sec=elapsed, resumed_stages=resumed,
-        stage_secs=clock.secs)
+        stage_secs={k: round(v, 2) for k, v in clock.secs.items()})
 
 
 def _tune_scan_partitions(spark: SparkSession,
@@ -899,7 +908,7 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
             raise ValueError(
                 f"field columns collide after key normalization: {coll}"
                 " — the composite key:value tokens would be ambiguous")
-    clock = _StageClock()
+    clock = StageClock()
     # input_hint shape is (url, warc_ts, html, text, lang); a table
     # carrying only the raw html gets the pinned extractor applied
     # (byte-identity with pre-extracted text is a test invariant).
@@ -969,18 +978,16 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         # tokens scan + groupBy lineage (two extra corpus scans measured
         # as most of this stage's wall time).  LAZY: the boundary-sample
         # job inside assign_doc_ids_ranged is the first consumer and
-        # doubles as the materializing action — eager=True paid one
-        # extra job launch.  ~one short row per doc; distributed
-        # MEMORY_AND_DISK — on a real cluster a reliable checkpoint dir
-        # / Iceberg staging table plays this role.
-        doc_lens = _doc_lens(tokens).localCheckpoint(eager=False)
+        # doubles as the materializing action — an eager count paid one
+        # extra job launch.  ~one short row per doc.
+        doc_lens, release = _persist(_doc_lens(tokens))
         # corpus stats (n_docs, Σdl) persist in the manifest so later
         # stages, resumes, and serve startup never pay a job for them
         stats = _write_doc_stats(store, doc_lens)
         store.set_meta("n_docs", int(stats["n"]))
         store.set_meta("avgdl",
                        stats["sum"] / stats["n"] if stats["n"] else 0.0)
-        doc_lens.unpersist()
+        release()
         store.commit("doc_stats", fps["doc_stats"])
     clock("doc_stats")
     doc_stats = store.read(spark, "doc_stats")
@@ -1026,15 +1033,14 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         # deterministic on committed input, so "df provably equals the
         # posting contents" (FIXTURES.md inv 2) still holds for
         # everything written here.
-        # r06 session 3: terms_src is materialized ONCE (eager
-        # localCheckpoint — one 16-task agg job) instead of re-running
-        # the postings-parquet agg lineage inside every one of the 5+
+        # r06 session 3: terms_src is materialized ONCE (eager persist
+        # — one 16-task agg job) instead of re-running the
+        # postings-parquet agg lineage inside every one of the 5+
         # concurrent jobs (terms write, 2 mirror range-samples, 2
         # mirror writes, stats collect); the dictionary is O(vocab)
-        # slim rows, the standard distributed MEMORY_AND_DISK shape at
-        # any scale, and it is unpersisted before the stage commits.
+        # slim rows, and it is released before the stage commits.
         import threading
-        terms_src = _terms_of(postings).localCheckpoint(eager=True)
+        terms_src, release = _persist(_terms_of(postings), eager=True)
         _stats: dict = {}
         _terr: list[BaseException] = []
 
@@ -1067,7 +1073,7 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
             # with error teardown (round-5 ADVICE)
             tt.join()
             st.join()
-            terms_src.unpersist()
+            release()
         if _terr:
             raise _terr[0]
         if "err" in _stats:
@@ -1133,14 +1139,14 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
 
     # ---- doc ids for the new docs, offset past the committed space;
     # already-indexed (re-crawled) urls are dropped (see _doc_lens) ----
-    doc_lens = _doc_lens(tokens_new, store.read(spark, "doc_stats")) \
-        .localCheckpoint(eager=False)
+    doc_lens, release = _persist(
+        _doc_lens(tokens_new, store.read(spark, "doc_stats")))
     stats = _write_doc_stats(store, doc_lens, seg, first_id=n_old)
     n_new, dl_sum_new = int(stats["n"]), int(stats["sum"])
     n_total = n_old + n_new
     avgdl_total = ((avgdl_old * n_old + dl_sum_new) / n_total
                    if n_total else 0.0)
-    doc_lens.unpersist()
+    release()
     mark("doc_stats_append")
 
     # ---- postings for the new docs (same pipeline, new data only) ----
@@ -1220,7 +1226,7 @@ def _append_index(spark: SparkSession, pages: DataFrame, store: IndexStore,
     """File-growth append: filter the input to its NEW files and run the
     segment ingest over just those rows."""
     import zlib
-    clock = _StageClock()
+    clock = StageClock()
     seg = "a%08x" % zlib.crc32(";".join(new_files).encode())
 
     # input_file_name() and DataFrame.inputFiles() render file URIs

@@ -65,7 +65,17 @@ def _shingle_batches(batches):
     for batch in batches:
         if batch.num_rows == 0:
             continue
-        words = pc.split_pattern(pc.utf8_lower(batch.column("text")), " ")
+        text = batch.column("text")
+        low = pc.utf8_lower(text)
+        # the JVM's full case mapping differs from utf8_lower only on
+        # U+0130 and final sigma: str.lower those rows (see _shingles)
+        fix = pc.fill_null(pc.match_substring_regex(text, "[\u0130\u03a3]"),
+                           False)
+        rows = np.flatnonzero(fix.to_numpy(zero_copy_only=False))
+        if len(rows):
+            low = pc.replace_with_mask(low, fix, pa.array(
+                [text[int(i)].as_py().lower() for i in rows], pa.string()))
+        words = pc.split_pattern(low, " ")
         offs = words.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
         nw = np.diff(offs)
         cnt = np.where(nw >= SHINGLE_N, nw - SHINGLE_N + 1, 0)
@@ -93,6 +103,14 @@ def _shingles(docs: DataFrame, distinct: bool = True) -> DataFrame:
     Shingling runs in the Arrow kernel above (docs with < SHINGLE_N
     words drop out inside it, exactly like the old `size(words) >= 3`
     filter).
+
+    Lowercasing follows Spark's lower(), the JVM's full Unicode case
+    mapping: "İ" becomes "i̇" (two code points) and a word-final "Σ"
+    becomes "ς".  Arrow's per-code-point utf8_lower gives "i" and "σ"
+    there, so the kernel re-lowercases just the rows holding U+0130 or
+    U+03A3 with str.lower, which agrees with the JVM on both.  DuckDB's
+    lower() (the SHINGLE_CTE oracle) maps per code point like Arrow;
+    the documents fixtures are ASCII, where all of them agree.
 
     distinct=False skips the per-(doc, shingle) dedup Exchange for
     consumers whose aggregation is duplicate-insensitive (MinHash's

@@ -4,44 +4,61 @@ Reference lifecycle being re-expressed (reference/oscar-cmd/LiveCompleter.cpp:17
 parse → per-leaf trie lookup → lazy cell-wise set ops (CellQueryResult)
 → flatten → first-k in docID-rank order.  Our translation:
 
-parse (shared parser) → broadcast-of-query-terms lookup in `terms`
-(bucket partition-pruned) → per-term block fetch from `postings`
-(term + bucket filters pushed to parquet; metadata phase reads ONLY the
-metadata columns, so the scan never touches the payload bytes — column
-pruning is our analog of oscar reading trie payload pointers without
-loading ItemIndex data) → two execution strategies:
+parse (shared parser) → wildcard expansion → broadcast-of-query-terms
+lookup in `terms` (bucket partition-pruned) → per-term block fetch from
+`postings` (term + bucket filters pushed to parquet; metadata phase
+reads ONLY the metadata columns, so the scan never touches the payload
+bytes — column pruning is our analog of oscar reading trie payload
+pointers without loading ItemIndex data).
 
-- brute: decode every matching block, score, set-algebra on DataFrames,
-  global TakeOrdered(k).  The dual-path partner (analog of the cqr==tcqr
-  assert at reference/oscar-cmd/Workfunctions.cpp:1169-1191).
+One planner (SearchEngine._plan) makes that parse → expand → df lookup
+→ tree-shape decision for search, search_many and the facet doc set,
+and picks one path per query (`mode` is auto | local | pruned | brute):
 
-- local (default for single/AND/OR queries whose total candidate
-  postings sit below PRUNE_MIN_POSTINGS): ONE pruned collect job, then
-  decode + BM25 + top-k driver-side — the analog of oscar serving from
-  the mmap'd index inside the server process.  Same kernel as the
-  distributed path (value-identical by construction).
+- empty: no term present, or an AND / phrase query with an absent term
+  — answered without touching Spark.
 
-- pruned ("block-max WAND at range granularity", default for
-  single/AND/OR queries above the threshold): ranges are oscar's cells;
-  per-(term,range) block metadata carries max_score (the block-max).
-    phase A: rank candidate ranges by Σ_term max_score upper bound
-             (metadata-only job), exactly score the top seed ranges,
-             θ := k-th best seed score — a valid final-threshold lower
-             bound because seed docs are a subset of all docs.
+- local (auto for single/AND/OR queries whose candidate postings sit
+  below PRUNE_MIN_POSTINGS): blocks come through the engine's LRU block
+  cache (at most ONE pruned fetch job for the missing terms), then
+  decode + BM25 + top-k in numpy inside the driver, returned as Python
+  rows — no DataFrame round trip.  The analog of oscar serving from the
+  mmap'd index inside the server process; same kernel (_score_pdf) as
+  the distributed paths, so value-identical by construction.
+
+- pruned ("block-max WAND at range granularity", auto for single/AND/OR
+  queries above the threshold; an explicit mode="pruned" always runs
+  the metadata phase): ranges are oscar's cells; per-(term,range) block
+  metadata carries (max_tf, min_dl), the block-max.
+    phase A: rank candidate ranges by Σ_term bm25(max_tf, min_dl)
+             upper bound (metadata-only job); when every candidate
+             range fits one fetch, score them all in one job and stop.
+             Otherwise exactly score the top seed ranges, θ := k-th
+             best seed score — a valid final-threshold lower bound
+             because seed docs are a subset of all docs.
     phase B: decode+score ONLY ranges with ub ≥ θ (strict < pruned),
              union seeds, global top-k.
   AND queries additionally keep only ranges containing ALL terms before
   ranking (the intersection-on-block-ids fast path, mirroring oscar's
   cell-wise set ops with fm/pm refinement, SURVEY.md §2.6).
 
-Everything is DataFrame + Arrow kernels; per-range scoring is a
+- brute (explicit, and for NOT/XOR trees and phrases inside
+  combinators whatever the mode): decode every matching block, score,
+  set-algebra on DataFrames, global TakeOrdered(k).  The dual-path partner (analog of
+  the cqr==tcqr assert at reference/oscar-cmd/Workfunctions.cpp:
+  1169-1191).
+
+- phrase (a bare quoted phrase on a positional store): per-range
+  adjacency kernel over positional payloads, local top-k per range.
+
+Spark paths are DataFrame + Arrow kernels; per-range scoring is a
 vectorized numpy applyInPandas (decode → bm25_np → segment-sum), with a
 local per-range top-k cut so the final shuffle moves ≤ k rows per range.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -53,6 +70,7 @@ from oscar_spark.functions.bm25 import bm25_np
 from oscar_spark.functions.codec import block_decoder
 from oscar_spark.serve import parser
 from oscar_spark.sources.tables import IndexStore
+from oscar_spark.timing import StageClock
 
 _META_COLS = ["bucket", "term", "block_id", "range_id", "first_doc",
               "last_doc", "doc_count", "max_tf", "min_dl"]
@@ -74,30 +92,24 @@ def clear_preload_cache() -> None:
     _PRELOAD_CACHE.clear()
 
 
-class _StageTimer:
-    """Per-query wall-clock split across serve stages — the analog of
-    the reference's cqr-calc / subSet / toGlobalIds / flaten breakdown
-    (reference/oscar-cmd/Benchmark.cpp:159-214): each mark() charges
-    the time since the previous mark to a named stage.  Stage
-    boundaries sit at Spark ACTIONS (collects), where lazy plan time
-    actually materializes."""
-
-    __slots__ = ("t", "_last")
-
-    def __init__(self):
-        import time
-        self.t: dict[str, float] = {}
-        self._last = time.time()
-
-    def mark(self, name: str) -> None:
-        import time
-        now = time.time()
-        self.t[name] = self.t.get(name, 0.0) + (now - self._last)
-        self._last = now
-
-
+# per-query wall-clock split published in SearchEngine.last_stage_times
+# — the analog of the reference's cqr-calc / subSet / toGlobalIds /
+# flaten breakdown (reference/oscar-cmd/Benchmark.cpp:159-214).  Stage
+# boundaries sit at Spark ACTIONS (collects), where lazy plan time
+# actually materializes; the local path charges fetch, decode, score
+# and top-k to rest_score_topk.
 SERVE_STAGES = ["parse", "expand", "term_lookup", "meta_prune",
                 "seed_score", "rest_score_topk"]
+_MODES = ("auto", "local", "pruned", "brute")
+
+
+class _Plan(NamedTuple):
+    """One query's serve decision (SearchEngine._plan)."""
+    path: str               # empty | local | pruned | brute | phrase
+    node: tuple             # expanded AST
+    dfmap: dict             # term → df of the present terms
+    present: list           # query terms with postings, query order
+    require_all: int | None  # AND: a doc must match this many terms
 
 
 def _score_pdf(pdf: pd.DataFrame, decode, dfmap: dict[str, int],
@@ -106,7 +118,11 @@ def _score_pdf(pdf: pd.DataFrame, decode, dfmap: dict[str, int],
     """Decode + BM25 + per-doc sum over one batch of posting blocks —
     the single scoring kernel shared by the distributed per-range
     applyInPandas path (_score_ranges) and the driver-local small-query
-    path (_score_local), so both are value-identical by construction.
+    path (SearchEngine._answer), so both are value-identical by
+    construction (the driver's global unique-sum equals the per-range
+    one because doc ids are distinct across ranges).  With local_k, the result is the top local_k rows
+    sorted by (score desc, doc_id asc) — the order of the Spark paths'
+    final orderBy (equal doubles tie identically in both engines).
 
     Blocks are sorted by (term, range_id) first: float addition is
     non-associative, and without a pinned order each doc's per-term
@@ -139,7 +155,7 @@ def _score_pdf(pdf: pd.DataFrame, decode, dfmap: dict[str, int],
         cnt = np.bincount(inv, minlength=len(uniq))
         keep = cnt == require_all
         uniq, ssum = uniq[keep], ssum[keep]
-    if local_k is not None and len(uniq) > local_k:
+    if local_k is not None:
         order = np.lexsort((uniq, -ssum))[:local_k]
         uniq, ssum = uniq[order], ssum[order]
     return pd.DataFrame({"doc_id": uniq.astype(np.int64),
@@ -248,7 +264,6 @@ class SearchEngine:
         self._block_cache_bytes = 0
         self.PRUNE_MIN_POSTINGS = int(_os.environ.get(
             "OSCAR_PRUNE_MIN_POSTINGS", self.PRUNE_MIN_POSTINGS))
-        self._timer: _StageTimer | None = None
         self.last_stage_times: dict[str, float] | None = None
         # term-dictionary preload, memoized PER STORE SNAPSHOT at module
         # level: repeated SearchEngine construction over one store
@@ -568,35 +583,6 @@ class SearchEngine:
                 cols["payload"].append(p)
         return pd.DataFrame(cols)
 
-    def _score_local(self, present: list[str], dfmap: dict[str, int],
-                     require_all: int | None, k: int) -> DataFrame:
-        """Driver-side scoring for SMALL candidate sets: collect the
-        (pruned, term-filtered) posting blocks in ONE Spark job and
-        decode + BM25 + top-k in-process — the analog of oscar serving
-        from its mmap'd index inside the server process.  Below
-        PRUNE_MIN_POSTINGS the decoded arrays are a few MB, and the
-        applyInPandas route costs a whole extra shuffle stage + Python
-        worker round-trip per query for work numpy does in
-        milliseconds.  Same kernel as _score_ranges (global unique-sum
-        is correct because doc ids are distinct across ranges), so the
-        two paths are value-identical by construction."""
-        pdf = self._fetch_blocks_local(present)
-        out = _score_pdf(pdf, self._decode, dfmap, float(self.n_docs),
-                         float(self.avgdl), require_all, local_k=k)
-        # r06b: finish the sort + k-cut here in numpy — (score desc,
-        # doc_id asc), exactly the ordering search_df's Spark tail
-        # applied (equal doubles tie identically in both engines).  The
-        # returned relation is a LocalTableScan, so search_df skips its
-        # orderBy/limit for this path and a collect() costs ZERO Spark
-        # jobs; the Spark sort of these ≤k driver-local rows measured 3
-        # jobs (~0.15s) of the ~0.2s warm query wall.
-        if len(out):
-            order = np.lexsort((out["doc_id"].to_numpy(),
-                                -out["score"].to_numpy()))[:k]
-            out = out.iloc[order].reset_index(drop=True)
-        return self.spark.createDataFrame(
-            out, "doc_id long, score double")
-
     # ---- phrase scoring (QT_EXACT: adjacency over positional payloads;
     # per-node query-type payload analog of
     # reference/oscar-create/CellTextCompleter.h:457-473) ----
@@ -808,87 +794,97 @@ class SearchEngine:
                     .select("doc_id"))
         raise ValueError(kind)
 
-    # ---- public API ----
-    def search_df(self, query: str, k: int = 10,
-                  mode: str = "auto") -> DataFrame:
-        """→ DataFrame(doc_id long, score double), the top-k, ordered.
+    # ---- the serve plan: the ONE place a query's path is chosen ----
+    def _plan(self, query: str, mode: str = "auto",
+              clock: StageClock | None = None) -> _Plan:
+        """parse → wildcard expansion → df lookup → tree shape → path.
 
-        Per-stage wall-clock lands in self.last_stage_times after the
-        RESULT is consumed (search() finalizes the last stage; a caller
-        collecting the DataFrame itself can call _finish_timer())."""
-        self._timer = _StageTimer()
+        empty: no term present, or an AND / phrase query with an absent
+        term.  phrase: a bare quoted phrase on a positional store,
+        whatever the mode.  brute: NOT/XOR trees and phrases inside
+        combinators, whatever the mode — local and pruned score the
+        UNION of present terms, which on such a tree would silently
+        answer OR.  Otherwise the mode itself, and auto picks local
+        below PRUNE_MIN_POSTINGS candidate postings, pruned above."""
+        if mode not in _MODES:
+            raise ValueError(f"mode must be one of {_MODES}: {mode!r}")
+        mark = clock or (lambda name: None)
         node = parser.parse(query, field_keys=self._field_keys)
-        self._timer.mark("parse")
+        mark("parse")
         node = self._rewrite_prefixes(node)
-        self._timer.mark("expand")
+        mark("expand")
         terms = parser.query_terms(node)
         dfmap = self.term_stats(terms)
-        self._timer.mark("term_lookup")
+        mark("term_lookup")
         shape = _tree_shape(node)
+        present = [t for t in terms if dfmap.get(t, 0) > 0]
+        if not present or (shape in ("and", "phrase")
+                           and len(present) < len(terms)):
+            path = "empty"
+        elif shape == "phrase":
+            # only reachable on a positional store — otherwise the
+            # rewrite already degraded the phrase to AND
+            path = "phrase"
+        elif shape not in ("single", "and", "or"):
+            path = "brute"
+        elif mode == "auto":
+            # below the pruning threshold the whole candidate set is a
+            # few MB decoded: serve it driver-locally (oscar's
+            # in-process mmap serving, re-expressed)
+            path = ("local" if sum(dfmap[t] for t in present)
+                    < self.PRUNE_MIN_POSTINGS else "pruned")
+        else:
+            path = mode
+        return _Plan(path, node, dfmap, present,
+                     len(terms) if shape == "and" else None)
+
+    def _answer(self, plan: _Plan, k: int,
+                blocks: pd.DataFrame | None = None,
+                clock: StageClock | None = None) -> list[tuple[int, float]]:
+        """The top-k rows of one plan.  local: blocks through the block
+        cache (or the caller's shared fetch), scored and cut in numpy —
+        no Spark DataFrame.  pruned / brute / phrase: collect the
+        ordered, limited DataFrame."""
         # release the previous query's brute-path cache: a long-running
         # engine would otherwise accumulate one cached RDD per brute
         # query until executor storage memory evicts under pressure
         self._release_brute_cache()
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, score double")
-        if shape == "empty" or not terms:
-            return empty
-        if shape in ("and", "phrase") and \
-                any(dfmap.get(t, 0) == 0 for t in terms):
-            return empty
-        if shape == "phrase":
-            # dedicated positional path: adjacency check + scoring in
-            # one decode pass, local top-k per range (only reachable
-            # when the store has positions — otherwise the rewrite
-            # already degraded the phrase to AND)
-            result = self._score_phrase_ranges(list(node[1]), dfmap, k)
-            return result.orderBy(F.desc("score"),
-                                  F.asc("doc_id")).limit(k)
-        if mode == "auto":
-            if shape in ("single", "and", "or"):
-                # below the pruning threshold the whole candidate set is
-                # a few MB decoded: serve it driver-locally (one pruned
-                # collect job, no shuffle/Python-worker round trip —
-                # oscar's in-process mmap serving, re-expressed)
-                total = sum(dfmap.get(t, 0) for t in terms)
-                mode = ("local" if total < self.PRUNE_MIN_POSTINGS
-                        else "pruned")
+        if plan.path == "empty":
+            return []
+        if plan.path == "local":
+            if blocks is None:
+                blocks = self._fetch_blocks_local(plan.present)
             else:
-                mode = "brute"
-        # pruned / all_ranges / local score the UNION of present terms —
-        # on a general tree (NOT/XOR) that silently returns OR
-        # semantics, so all three coerce to the set-algebra brute path
-        if mode in ("pruned", "all_ranges", "local") and \
-                shape not in ("single", "and", "or"):
-            mode = "brute"
-
-        if mode == "local":
-            present = [t for t in terms if dfmap.get(t, 0) > 0]
-            # already globally sorted + k-cut in numpy (see
-            # _score_local): return the local relation as-is so the
-            # caller's collect() is driver-side, job-free
-            return self._score_local(
-                present, dfmap,
-                len(terms) if shape == "and" else None, k)
-        elif mode == "pruned":
-            result = self._search_pruned(terms, dfmap, shape, k)
-        elif mode == "all_ranges":
-            present = [t for t in terms if dfmap.get(t, 0) > 0]
-            result = self._score_ranges(
-                self._blocks(present, meta_only=False), dfmap,
-                len(terms) if shape == "and" else None, local_k=k)
+                blocks = blocks[blocks["term"].isin(plan.present)]
+            top = _score_pdf(blocks, self._decode, plan.dfmap,
+                             float(self.n_docs), float(self.avgdl),
+                             plan.require_all, local_k=k)
+            return list(zip(top["doc_id"].tolist(), top["score"].tolist()))
+        if plan.path == "phrase":
+            # adjacency check + scoring in one decode pass, local top-k
+            # per range
+            result = self._score_phrase_ranges(
+                list(plan.node[1]), plan.dfmap, k)
+        elif plan.path == "pruned":
+            result = self._search_pruned(plan, k, clock)
         else:
-            # cached: the set-algebra tree references `decoded` once per
-            # leaf plus once for scoring — uncached, Spark re-decodes the
-            # blocks for every reference inside the single job.  Held in
-            # _brute_cache; released on the next query / drop_memory.
-            decoded = self._decoded([t for t in terms if dfmap.get(t, 0) > 0],
-                                    dfmap).cache()
-            self._brute_cache = decoded
-            docs = self._eval_node(node, decoded, dfmap)
+            decoded, docs = self._brute_docs(plan)
             result = (decoded.join(docs, "doc_id")
                       .groupBy("doc_id").agg(F.sum("score").alias("score")))
-        return result.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        rows = result.orderBy(F.desc("score"), F.asc("doc_id")) \
+            .limit(k).collect()
+        return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+
+    def _brute_docs(self, plan: _Plan) -> tuple[DataFrame, DataFrame]:
+        """(decoded postings of the present terms, doc set the query
+        tree selects).  decoded is cached: the set-algebra tree
+        references it once per leaf plus once for scoring — uncached,
+        Spark re-decodes the blocks for every reference inside the
+        single job.  Held in _brute_cache; released on the next query /
+        drop_memory."""
+        decoded = self._decoded(plan.present, plan.dfmap).cache()
+        self._brute_cache = decoded
+        return decoded, self._eval_node(plan.node, decoded, plan.dfmap)
 
     # Below this many candidate postings the driver-local path wins:
     # numpy decodes ~50M postings/s in-process, so a query only
@@ -907,13 +903,10 @@ class SearchEngine:
     # throughput, both cluster properties).
     PRUNE_MIN_POSTINGS = 2_000_000
 
-    def _search_pruned(self, terms, dfmap, shape, k) -> DataFrame:
-        present = [t for t in terms if dfmap.get(t, 0) > 0]
-        require_all = len(terms) if shape == "and" else None
-        if sum(dfmap.get(t, 0) for t in present) < self.PRUNE_MIN_POSTINGS:
-            return self._score_ranges(
-                self._blocks(present, meta_only=False), dfmap,
-                require_all, local_k=k)
+    def _search_pruned(self, plan: _Plan, k: int,
+                       clock: StageClock | None) -> DataFrame:
+        present, dfmap, require_all = \
+            plan.present, plan.dfmap, plan.require_all
         meta = self._blocks(present, meta_only=True)
 
         # range-level upper bounds from block metadata only (no payload
@@ -948,8 +941,8 @@ class SearchEngine:
         # candidate in a single job instead
         fetch_n = max(seed_n, 64)
         seed_rows = ranges.orderBy(F.desc("ub")).limit(fetch_n + 1).collect()
-        if self._timer:
-            self._timer.mark("meta_prune")
+        if clock:
+            clock("meta_prune")
         if not seed_rows:
             return self.spark.createDataFrame([], "doc_id long, score double")
         exhausted = len(seed_rows) <= fetch_n  # every candidate range fetched
@@ -966,8 +959,8 @@ class SearchEngine:
             return seed_scored
         seed_top = seed_scored.orderBy(
             F.desc("score"), F.asc("doc_id")).limit(k).collect()
-        if self._timer:
-            self._timer.mark("seed_score")
+        if clock:
+            clock("seed_score")
         theta = seed_top[k - 1]["score"] if len(seed_top) >= k else None
 
         rest = ranges.filter(~F.col("range_id").isin(seed_ids))
@@ -993,17 +986,11 @@ class SearchEngine:
     def _docs_for_query(self, query: str) -> DataFrame:
         """Full (unranked) doc-id set matching a parsed query — set
         algebra, prefix/suffix expansion, and phrase leaves included."""
-        node = self._rewrite_prefixes(
-            parser.parse(query, field_keys=self._field_keys))
-        terms = parser.query_terms(node)
-        dfmap = self.term_stats(terms)
+        plan = self._plan(query, "brute")
         self._release_brute_cache()
-        if node[0] == "empty" or not terms:
+        if plan.path == "empty":
             return self.spark.createDataFrame([], "doc_id long")
-        decoded = self._decoded(
-            [t for t in terms if dfmap.get(t, 0) > 0], dfmap).cache()
-        self._brute_cache = decoded
-        return self._eval_node(node, decoded, dfmap)
+        return self._brute_docs(plan)[1]
 
     def _facet_value_terms(self, key_norm: str, cap: int) -> list[str]:
         """All `key:value` dictionary terms of one facet key (prefix
@@ -1065,91 +1052,37 @@ class SearchEngine:
         return entropy_over_kv(self.facet_stats(query, keys),
                                exclude_keys, exclude_values)
 
-    def _finish_timer(self) -> None:
-        if self._timer is not None:
-            self._timer.mark("rest_score_topk")
-            self.last_stage_times = {
-                s: round(self._timer.t.get(s, 0.0), 6)
-                for s in SERVE_STAGES}
-            self._timer = None
-
+    # ---- public API ----
     def search(self, query: str, k: int = 10,
                mode: str = "auto") -> list[tuple[int, float]]:
-        rows = self.search_df(query, k, mode).collect()
-        self._finish_timer()
-        return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+        """Top-k (doc_id, score), score desc then doc_id asc.  Per-stage
+        wall-clock lands in self.last_stage_times."""
+        clock = StageClock()
+        rows = self._answer(self._plan(query, mode, clock), k, clock=clock)
+        clock("rest_score_topk")
+        self.last_stage_times = {s: round(clock.secs.get(s, 0.0), 6)
+                                 for s in SERVE_STAGES}
+        return rows
 
     def search_many(self, queries: list[str], k: int = 10) \
             -> list[list[tuple[int, float]]]:
         """Batch serve: same answers as [search(q, k) for q in queries],
-        with every driver-local-eligible query (single/AND/OR below
-        PRUNE_MIN_POSTINGS — the common warm case) served from ONE
-        shared pruned block-fetch job over the union of their terms
-        instead of one collect job each.  Per-job launch latency is the
-        build/serve fixed cost quantified in BENCH/CAPABILITY.md
-        (~0.2–0.3 s/job); a 10-query batch pays it once.  Non-eligible
-        queries (phrase, NOT/XOR trees, above-threshold) fall back to
-        their normal search() paths unchanged.  Driver memory for the
-        shared fetch is bounded by Σ_q PRUNE_MIN_POSTINGS decoded
-        postings (a few MB per eligible query).  last_stage_times is
-        not populated by the batch path."""
-        plans: list[tuple] = []   # (query, kind, payload)
-        union_terms: dict[str, None] = {}
-        for q in queries:
-            node = self._rewrite_prefixes(
-                parser.parse(q, field_keys=self._field_keys))
-            terms = parser.query_terms(node)
-            dfmap = self.term_stats(terms)
-            shape = _tree_shape(node)
-            if shape == "empty" or not terms or (
-                    shape in ("and", "phrase")
-                    and any(dfmap.get(t, 0) == 0 for t in terms)):
-                plans.append((q, "empty", None))
-                continue
-            total = sum(dfmap.get(t, 0) for t in terms)
-            if shape in ("single", "and", "or") and \
-                    total < self.PRUNE_MIN_POSTINGS:
-                present = [t for t in terms if dfmap.get(t, 0) > 0]
-                if not present:
-                    # e.g. a single/OR query of absent-only terms:
-                    # search() returns [] for these; classifying them
-                    # 'local' with present=[] used to crash the batch
-                    # path when NO other query contributed union terms
-                    # (shared stayed None — round-5 ADVICE fix)
-                    plans.append((q, "empty", None))
-                    continue
-                req = len(terms) if shape == "and" else None
-                plans.append((q, "local", (present, dfmap, req)))
-                for t in present:
-                    union_terms[t] = None
-            else:
-                plans.append((q, "fallback", None))
-        shared: pd.DataFrame | None = None
-        if union_terms:
-            # through the engine block cache (r06 session 3): terms
-            # already resident cost nothing; the missing ones still
-            # share ONE bucket+term-pruned fetch job — a fully warm
-            # batch is zero-job (pinned by
-            # test_search_many_single_fetch_job)
-            shared = self._fetch_blocks_local(list(union_terms))
-        out: list[list[tuple[int, float]]] = []
-        for q, kind, payload in plans:
-            if kind == "empty":
-                out.append([])
-            elif kind == "fallback":
-                out.append(self.search(q, k))
-            else:
-                present, dfmap, req = payload
-                sub = shared[shared["term"].isin(present)]
-                scored = _score_pdf(sub, self._decode, dfmap,
-                                    float(self.n_docs),
-                                    float(self.avgdl), req, local_k=k)
-                scored = scored.sort_values(
-                    ["score", "doc_id"], ascending=[False, True],
-                    kind="mergesort").head(k)
-                out.append([(int(d), float(s)) for d, s in
-                            zip(scored["doc_id"], scored["score"])])
-        return out
+        with every local plan (single/AND/OR below PRUNE_MIN_POSTINGS —
+        the common warm case) served from ONE shared block fetch over
+        the union of their terms, through the block cache, instead of
+        one fetch each.  Per-job launch latency is the build/serve fixed
+        cost quantified in BENCH/CAPABILITY.md (~0.2–0.3 s/job); a
+        10-query batch pays it once, and a fully warm batch pays none
+        (pinned by test_search_many_single_fetch_job).  Other plans are
+        answered on their own path.  Driver memory for the shared fetch
+        is bounded by Σ_q PRUNE_MIN_POSTINGS decoded postings (a few MB
+        per local query).  last_stage_times is not populated by the
+        batch path."""
+        plans = [self._plan(q) for q in queries]
+        union = list(dict.fromkeys(
+            t for p in plans if p.path == "local" for t in p.present))
+        shared = self._fetch_blocks_local(union) if union else None
+        return [self._answer(p, k, blocks=shared) for p in plans]
 
     def search_page(self, query: str, k: int = 10, offset: int = 0,
                     mode: str = "auto") -> list[tuple[int, float]]:

@@ -382,6 +382,30 @@ def test_local_serve_matches_spark_paths(spark, built_index):
         eng.search("the", k=10, mode="local")
 
 
+def test_local_and_empty_answers_build_no_dataframe(spark, built_index,
+                                                    monkeypatch):
+    """A warm local query and an empty-result query are answered in the
+    driver: neither builds a Spark DataFrame (each createDataFrame is a
+    Python→JVM round trip of tens of ms)."""
+    from pyspark.sql import SparkSession
+
+    from oscar_spark.serve.executor import SearchEngine
+    d, _ = built_index
+    eng = SearchEngine(spark, d)
+    want = eng.search("city + state", k=10, mode="local")  # warms cache
+    assert want
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("createDataFrame on a driver-side answer")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    assert eng.search("city + state", k=10, mode="local") == want
+    assert eng.search("nosuchterm", k=10) == []
+    assert eng.search("city nosuchterm", k=10) == []  # AND, absent term
+    with pytest.raises(ValueError):
+        eng.search("city", k=10, mode="all_ranges")
+
+
 # ---- store consistency checker (ConsistencyCheckers.cpp analog) ----
 
 def test_check_index_green_on_fresh_and_appended(spark, built_index):

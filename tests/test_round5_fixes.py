@@ -288,16 +288,38 @@ def test_media_thumbnails_real_resize(spark):
 # per-query search() exactly while sharing one fetch job for the
 # driver-local-eligible queries ----
 
+MIXED_QUERIES = ["the", "of and", "city + state", "time - year",
+                 "house ^ music", "war history world", '"north south"',
+                 "wd0042", "nosuchterm", "((", "ci* + history"]
+
+
 def test_search_many_matches_sequential(spark, built_index):
     from oscar_spark.serve.executor import SearchEngine
     d, _ = built_index
     eng = SearchEngine(spark, d)
-    queries = ["the", "of and", "city + state", "time - year",
-               "house ^ music", "war history world", '"north south"',
-               "wd0042", "nosuchterm", "((", "ci* + history"]
+    queries = MIXED_QUERIES
     batch = eng.search_many(queries, k=10)
     seq = [eng.search(q, k=10) for q in queries]
     assert batch == seq
+
+
+def test_search_many_parses_each_query_once(spark, built_index,
+                                            monkeypatch):
+    """search_many plans every query once and answers non-local plans
+    from that plan — no second parse through search()."""
+    from oscar_spark.serve import executor
+    d, _ = built_index
+    eng = executor.SearchEngine(spark, d)
+    parsed = []
+    parse = executor.parser.parse
+
+    def counting_parse(query, *args, **kwargs):
+        parsed.append(query)
+        return parse(query, *args, **kwargs)
+
+    monkeypatch.setattr(executor.parser, "parse", counting_parse)
+    eng.search_many(MIXED_QUERIES, k=10)
+    assert sorted(parsed) == sorted(MIXED_QUERIES)
 
 
 def test_search_many_single_fetch_job(spark, built_index):

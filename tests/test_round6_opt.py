@@ -355,6 +355,10 @@ def test_shingle_kernel_equivalence(spark):
         (5, "UPPER Case MiXeD words"),    # lowercased before split
         (6, "École Über straße wörter"),  # unicode lower
         (7, "x y z"),                     # exactly SHINGLE_N words
+        # full case mapping (JVM lower() == str.lower != utf8_lower):
+        (8, "İstanbul city centre"),      # U+0130 -> i + U+0307
+        (9, "ΟΔΟΣ ΣΟΦΟΣ ΣΟΦΟΣ"),          # word-final sigma -> ς
+        (10, "GROẞE weite strasse"),      # U+1E9E agrees everywhere
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = sorted(map(tuple,
@@ -527,3 +531,24 @@ def test_list_offsets_refuse_int32_wrap():
         list_offsets(np.array([2**31]))
     with pytest.raises(OverflowError, match="int32"):
         list_offsets(np.array([2**30, 2**30]))
+
+
+def test_build_persist_recomputes_lost_blocks(spark):
+    """The build's materialized inputs (doc_lens, terms_src) keep their
+    lineage: with every persisted block gone, as after losing the
+    executor that held it, the rows are recomputed, not lost — a local
+    checkpoint fails here ("Checkpoint block ... not found")."""
+    from oscar_spark.build.indexer import _persist
+
+    jsc = spark.sparkContext._jsc
+    src = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count()
+    want = sorted(map(tuple, src.collect()))
+    for eager in (True, False):
+        before = set(jsc.getPersistentRDDs().keys())
+        df, release = _persist(src, eager=eager)
+        assert sorted(map(tuple, df.collect())) == want
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                rdd.unpersist(True)  # every block of the new RDDs gone
+        assert sorted(map(tuple, df.collect())) == want
+        release()
